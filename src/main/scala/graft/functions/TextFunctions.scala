@@ -3,9 +3,10 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Scalar text functions (SURVEY.md §2.4) as pure Column compositions —
-  * zero UDFs, so everything stays inside whole-stage codegen and the
-  * optimizer can push/prune around them.
+/** Scalar text functions (SURVEY.md §2.4) as Column compositions and
+  * codegen'd Catalyst expressions — zero UDFs, so everything stays
+  * inside whole-stage codegen and the optimizer can push/prune around
+  * them.
   *
   * Reference semantics: `clean_text` (/root/reference/utils.py:84-105)
   * collapses every whitespace run to one space, trims, maps null→"",
@@ -14,21 +15,20 @@ import org.apache.spark.sql.functions._
   */
 object TextFunctions {
 
-  /** Whitespace-collapse + trim + null→"" (utils.py:99).
-    * `(?U)` makes Java's `\s` match the Unicode whitespace class that
-    * Python's `str.split()` uses (SURVEY §7.5 risk 1).
+  /** Whitespace-collapse + trim + null→"" (utils.py:99): one fused
+    * [[CleanText]] pass. Whitespace is exactly Python's `str.split()`
+    * set, [[CleanText.PythonWhitespace]] — Java's `(?U)\s` plus
+    * U+001C–U+001F (SURVEY §7.5 risk 1).
     */
-  def cleanText(c: Column): Column =
-    coalesce(trim(regexp_replace(c, "(?U)\\s+", " ")), lit(""))
+  def cleanText(c: Column): Column = CleanText.cleanText(c, -1)
 
   /** cleanText with the reference's truncate-and-ellipsis contract
-    * (utils.py:102-103): strictly-over-limit text becomes exactly
-    * maxLen chars + "...".
+    * (utils.py:102-103): text of more than maxLen code points after
+    * cleaning becomes exactly its first maxLen + "...".
     */
   def cleanText(c: Column, maxLen: Int): Column = {
-    val cleaned = cleanText(c)
-    when(length(cleaned) > maxLen, concat(substring(cleaned, 1, maxLen), lit("...")))
-      .otherwise(cleaned)
+    require(maxLen >= 0, s"maxLen must be >= 0, got $maxLen")
+    CleanText.cleanText(c, maxLen)
   }
 
   /** Whitespace tokenization; empty/blank input → empty array (mirrors

@@ -19,9 +19,11 @@ import org.apache.spark.sql.functions._
   *    scraper.py:217,316-318), while an ABSENT key is kept and
   *    defaulted (`fields.get("status", {})` → `{}` → "Unknown").
   *    Spark's JSON parser maps both cases to null, so [[JiraPipeline
-  *    .readRaw]] rides two `json_object_keys` presence probes along
-  *    the scan ([[ProbeFieldsKeys]]/[[ProbeTopKeys]]); when the probe
-  *    columns are present, only explicit nulls drop. Raw frames
+  *    .readRaw]] rides the key sets of the issue and of its `fields`
+  *    object along the scan ([[ProbeFieldsKeys]]/[[ProbeTopKeys]],
+  *    one `JsonKeyProbe` pass per line; the jira source fills the
+  *    same columns from its own parse); when the probe columns are
+  *    present, only explicit nulls drop. Raw frames
   *    without probes (schema-only readers) fall back to dropping all
   *    three null core objects — the pre-probe behavior. The "Unknown"
   *    default still applies to an empty object `{}` or a null `name`
@@ -31,7 +33,8 @@ import org.apache.spark.sql.functions._
   *  - P4: comments whose cleaned body is empty are dropped before
   *    comment_count is taken.
   *  - description capped at 20,000 chars (+"..."), comment bodies at
-  *    10,000 (config.py:43-44).
+  *    10,000 (config.py:43-44). Title, description and every comment
+  *    body go through the fused `cleanText` kernel (`CleanText`).
   */
 object JiraFlatten {
 

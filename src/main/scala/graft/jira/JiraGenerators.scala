@@ -187,7 +187,12 @@ object JiraGenerators {
         ),
         substring(
           array_join(
-            transform(slice(col("comments"), -2, 2), c => c.getField("body")),
+            transform(
+              // last min(2, size) comments: slice(c, -2, 2) is empty
+              // for a one-element array, Python's comments[-2:] is not
+              slice(col("comments"),
+                greatest(-size(col("comments")), lit(-2)), lit(2)),
+              c => c.getField("body")),
             "\n"
           ),
           1,

@@ -1,5 +1,6 @@
 package graft.jira
 
+import graft.functions.JsonKeyProbe
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,21 +24,19 @@ object JiraPipeline {
     * reference treats them oppositely (absent → default, null →
     * crash-drop; scraper.py:217,316-318), so the key sets ride along
     * the same scan — one text read, no second pass over the file, no
-    * shuffle. The probes cost two extra in-row JSON traversals of the
-    * line; a fused single-parse expression is possible if the flatten
-    * stage ever dominates a profile (it is ~0 next to the generators).
+    * shuffle. Both key sets come from one [[JsonKeyProbe]] pass over
+    * the line that skips every value but the `fields` object's keys.
     */
   def readRaw(spark: SparkSession, path: String): DataFrame =
     spark.read
       .text(path)
       .select(
         from_json(col("value"), JiraSchemas.rawIssueSchema).as("j"),
-        json_object_keys(get_json_object(col("value"), "$.fields"))
-          .as(JiraFlatten.ProbeFieldsKeys),
-        json_object_keys(col("value")).as(JiraFlatten.ProbeTopKeys)
+        JsonKeyProbe.keyProbe(col("value")).as("p")
       )
-      .select(col("j.*"), col(JiraFlatten.ProbeFieldsKeys),
-        col(JiraFlatten.ProbeTopKeys))
+      .select(col("j.*"),
+        col("p").getField(JsonKeyProbe.FieldsKeys).as(JiraFlatten.ProbeFieldsKeys),
+        col("p").getField(JsonKeyProbe.TopKeys).as(JiraFlatten.ProbeTopKeys))
 
   /** Ingest robustness for corpus-scale JSON: PERMISSIVE parse with a
     * quarantine column — a malformed line becomes one quarantine row

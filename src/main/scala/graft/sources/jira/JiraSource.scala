@@ -303,7 +303,7 @@ class JiraReaderFactory(required: StructType, options: Map[String, String])
   * sets of each issue object and its `fields` object, read with a
   * plain Jackson tree walk of the same response body the row parser
   * consumed (array order is preserved on both sides, so zip aligns).
-  * Mirrors the `json_object_keys` probes of
+  * Mirrors the `JsonKeyProbe` columns of
   * [[graft.jira.JiraPipeline.readRaw]].
   */
 object JiraJsonProbe {

@@ -1,6 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.storage.StorageLevel
 import java.util.concurrent.ConcurrentLinkedQueue
 
 /** Registry for operator-internal caches.
@@ -28,11 +29,15 @@ object Caches {
   implicit final class TrackedDataset[T](private val ds: Dataset[T])
       extends AnyVal {
 
-    /** `cache()` + register the handle for [[releaseAll]]. */
+    /** `cache()` + register the handle for [[releaseAll]]. A plan
+      * that is already cached (every warm pass re-derives the same
+      * plans) is only registered: `cache()` on it would just log
+      * CacheManager's "Asked to cache already cached data" WARN.
+      */
     def cacheTracked(): Dataset[T] = {
-      val c = ds.cache()
-      tracked.add(c)
-      c
+      if (ds.storageLevel == StorageLevel.NONE) ds.cache()
+      tracked.add(ds)
+      ds
     }
   }
 

@@ -1,7 +1,7 @@
 package graft.jira
 
 import graft.functions.TextFunctions
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -153,29 +153,49 @@ class JiraParitySpec extends AnyFunSuite {
     }
   }
 
-  test("column-expression generator ≡ typed flatMap twin") {
+  /** Column-expression generator output, asserted equal to the typed
+    * flatMap twin's on the same flattened issues.
+    */
+  private def generateBothWays(flat: DataFrame): Seq[TrainingExample] = {
     implicit val enc = Encoders.product[TrainingExample]
-    import spark.implicits._
-    for (proj <- Seq("TEST", "TEST2")) {
-      val flat = JiraFlatten.flatten(
+    val colForm = JiraGenerators
+      .generate(flat)
+      .select(col("task_type"), col("instruction"), col("input"),
+        col("output"), col("metadata"))
+      .as[TrainingExample]
+      .collect()
+      .toSeq
+      .sortBy(e => (e.metadata.issue_key, e.task_type, e.input))
+    val typedForm = JiraGeneratorsTyped
+      .generate(flat.as[IssueRecord](Encoders.product[IssueRecord]))
+      .collect()
+      .toSeq
+      .sortBy(e => (e.metadata.issue_key, e.task_type, e.input))
+    assert(colForm == typedForm)
+    colForm
+  }
+
+  test("column-expression generator ≡ typed flatMap twin") {
+    for (proj <- Seq("TEST", "TEST2"))
+      generateBothWays(JiraFlatten.flatten(
         JiraPipeline.readRaw(spark, s"$dir/raw_issues_$proj.jsonl"),
         proj
-      )
-      val colForm = JiraGenerators
-        .generate(flat)
-        .select(col("task_type"), col("instruction"), col("input"),
-          col("output"), col("metadata"))
-        .as[TrainingExample]
-        .collect()
-        .toSeq
-        .sortBy(e => (e.metadata.issue_key, e.task_type, e.input))
-      val typedForm = JiraGeneratorsTyped
-        .generate(flat.as[IssueRecord](Encoders.product[IssueRecord]))
-        .collect()
-        .toSeq
-        .sortBy(e => (e.metadata.issue_key, e.task_type, e.input))
-      assert(colForm == typedForm)
-    }
+      ))
+  }
+
+  test("issue_resolution keeps the only comment (≡ typed twin)") {
+    val issue = IssueRecord("R-1", "1", "R", "u", "Fix the leak",
+      "Leaks on close.", "Resolved", "Major", "Bug", "Ann", "Bob",
+      "2024-01-01T00:00:00.000+0000", "2024-01-02T00:00:00.000+0000",
+      "2024-01-03T00:00:00.000+0000", Nil, Nil, Nil, Nil,
+      Seq(IssueComment("Bob", "2024-01-02T00:00:00.000+0000",
+        "Closed the stream in finally.")), 1)
+    // a non-local scan, so the generators run as compiled code
+    val flat = spark.createDataset(spark.sparkContext.parallelize(Seq(issue)))(
+      Encoders.product[IssueRecord]).toDF()
+    val out = generateBothWays(flat)
+    assert(out.filter(_.task_type == "issue_resolution").map(_.output) ==
+      Seq("Closed the stream in finally."))
   }
 
   test("fan-out per issue is 2..7 rows with fixed emission order") {
