@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{DataType, StringType}
-import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The reference's `clean_text` (utils.py:84-105) as one fused pass:
@@ -16,9 +15,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * `maxLen` code points + "...".
   *
   * Whitespace is Python's `str.split()` set ([[CleanText.PythonWhitespace]]),
-  * not a regex class. ASCII input is collapsed byte-wise straight from
-  * the row buffer; anything else goes through a `String`, so malformed
-  * UTF-8 decodes to U+FFFD exactly as Spark's string functions do.
+  * not a regex class. The input is decoded to a `String` once and
+  * scanned once, so malformed UTF-8 decodes to U+FFFD exactly as
+  * Spark's string functions do.
   * CleanTextSpec pins equality with the composed
   * `regexp_replace`/`trim`/`substring` form this replaced.
   */
@@ -78,41 +77,12 @@ object CleanText {
     t
   }
 
-  /** Bit c set for each ASCII whitespace code point c (all <= 0x20). */
-  private val AsciiWs: Long =
-    PythonWhitespace.filter(_ < 0x80).foldLeft(0L)((m, c) => m | (1L << c))
-
   private val Empty = UTF8String.EMPTY_UTF8
-  private val Ellipsis = UTF8String.fromString("...")
 
   /** Called from generated code; `maxLen < 0` means no truncation. */
   def compute(text: UTF8String, maxLen: Int): UTF8String = {
     if (text == null) return Empty
-    val base = text.getBaseObject
-    val off = text.getBaseOffset
-    val n = text.numBytes
-    val out = new Array[Byte](n)
-    var j = 0
-    var pending = false
-    var i = 0
-    while (i < n) {
-      val b = Platform.getByte(base, off + i)
-      if (b < 0) return computeString(text.toString, maxLen)
-      if (b <= 0x20 && ((AsciiWs >>> b) & 1L) != 0) pending = j > 0
-      else {
-        if (pending) { out(j) = ' '; j += 1; pending = false }
-        out(j) = b
-        j += 1
-      }
-      i += 1
-    }
-    // ASCII: one byte per code point
-    if (maxLen >= 0 && j > maxLen)
-      UTF8String.concat(UTF8String.fromBytes(out, 0, maxLen), Ellipsis)
-    else UTF8String.fromBytes(out, 0, j)
-  }
-
-  private def computeString(s: String, maxLen: Int): UTF8String = {
+    val s = text.toString
     val sb = new java.lang.StringBuilder(s.length)
     var pending = false
     var i = 0

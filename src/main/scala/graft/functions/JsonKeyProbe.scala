@@ -11,7 +11,6 @@ import org.apache.spark.sql.catalyst.json.CreateJacksonParser
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType, StructField, StructType}
-import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Key sets of a JSON object line and of its `fields` member, from one
@@ -32,9 +31,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - keys keep document order and duplicates.
   *
   * The parser factory has the features of Spark's JSON expressions
-  * (unescaped control characters, single quotes). Lines of bytes
-  * 0x01–0x7F are parsed from the bytes; any other line takes Spark's
-  * own reader path, so malformed UTF-8 decodes identically.
+  * (unescaped control characters, single quotes).
   */
 case class JsonKeyProbe(child: Expression) extends UnaryExpression {
 
@@ -87,33 +84,11 @@ object JsonKeyProbe {
 
   private val Field = "fields"
 
-  private val Ones = 0x0101010101010101L
-  private val Highs = 0x8080808080808080L
-
-  /** Every byte in 0x01–0x7F: no high bit, and no borrow out of a zero
-    * byte when 1 is subtracted from each.
+  /** Spark's own reader path, so malformed UTF-8 decodes exactly as
+    * in `get_json_object` / `json_object_keys`.
     */
-  private def plainAscii(base: AnyRef, off: Long, n: Int): Boolean = {
-    var i = 0
-    while (i + 8 <= n) {
-      val w = Platform.getLong(base, off + i)
-      if (((w | (w - Ones)) & Highs) != 0) return false
-      i += 8
-    }
-    while (i < n) {
-      if (Platform.getByte(base, off + i) <= 0) return false
-      i += 1
-    }
-    true
-  }
-
-  private def parser(json: UTF8String): JsonParser = json.getBaseObject match {
-    case bytes: Array[Byte]
-        if plainAscii(bytes, json.getBaseOffset, json.numBytes) =>
-      factory.createParser(bytes,
-        (json.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, json.numBytes)
-    case _ => CreateJacksonParser.utf8String(factory, json)
-  }
+  private def parser(json: UTF8String): JsonParser =
+    CreateJacksonParser.utf8String(factory, json)
 
   /** Keys of the object the parser's current START_OBJECT opens; leaves
     * the parser on its END_OBJECT.

@@ -303,8 +303,12 @@ class JiraReaderFactory(required: StructType, options: Map[String, String])
   * sets of each issue object and its `fields` object, read with a
   * plain Jackson tree walk of the same response body the row parser
   * consumed (array order is preserved on both sides, so zip aligns).
-  * Mirrors the `JsonKeyProbe` columns of
-  * [[graft.jira.JiraPipeline.readRaw]].
+  * For well-formed issues without duplicate keys these are the key
+  * sets the `JsonKeyProbe` columns of [[graft.jira.JiraPipeline.readRaw]]
+  * compute. The tree walk differs where the probe keeps the quirks of
+  * `json_object_keys`: it lists a duplicated key once, takes the last
+  * `fields` member rather than the first non-null one, and gives null
+  * for a `fields` string that holds JSON object text.
   */
 object JiraJsonProbe {
   import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}

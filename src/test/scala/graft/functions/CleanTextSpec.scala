@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -41,24 +41,30 @@ class CleanTextSpec extends AnyFunSuite {
   private def diff(inputs: Seq[String]): Unit = {
     val rows = spark.sparkContext
       .parallelize(inputs.map(org.apache.spark.sql.Row(_)), 4)
-    val df = spark.createDataFrame(rows,
-      StructType(Seq(StructField("v", StringType))))
+    diffFrame(spark.createDataFrame(rows,
+      StructType(Seq(StructField("v", StringType)))), inputs.length)
+  }
+
+  /** [[diff]] over a frame's string column `v`, which may hold bytes
+    * that are not valid UTF-8.
+    */
+  private def diffFrame(df: DataFrame, n: Int): Unit = {
     val cols = (TextFunctions.cleanText(col("v")) +: composed(col("v")) +:
       MaxLens.flatMap(l =>
         Seq(TextFunctions.cleanText(col("v"), l), composed(col("v"), l))))
-    val got = df.select(col("v") +: cols: _*).collect()
-    assert(got.length == inputs.length)
+    val got = df.select(col("v").cast("binary") +: cols: _*).collect()
+    assert(got.length == n)
     got.foreach { r =>
-      val in = r.getString(0)
-      val hex = Option(in).map(_.map(c => f"\\u${c.toInt}%04x").mkString)
+      val in = Option(r.getAs[Array[Byte]](0)).map(UTF8String.fromBytes).orNull
+      val hex = Option(r.getAs[Array[Byte]](0)).map(_.map(b => f"$b%02x").mkString(" "))
       val limits = None +: MaxLens.map(Some(_))
       limits.zipWithIndex.foreach { case (l, k) =>
         val fused = r.getString(1 + 2 * k)
         val ref = r.getString(2 + 2 * k)
-        assert(fused == ref, s"codegen maxLen=$l mismatch for [$hex]")
+        assert(fused == ref, s"codegen maxLen=$l mismatch for bytes [$hex]")
         val interp = CleanText(Literal.create(in, StringType), l.getOrElse(-1))
           .eval().asInstanceOf[UTF8String].toString
-        assert(interp == ref, s"interpreted maxLen=$l mismatch for [$hex]")
+        assert(interp == ref, s"interpreted maxLen=$l mismatch for bytes [$hex]")
       }
     }
   }
@@ -112,5 +118,21 @@ class CleanTextSpec extends AnyFunSuite {
     val samples = Gen.listOfN(400, text)
       .apply(Gen.Parameters.default.withSize(30), Seed(20261017L)).get
     diff(samples.distinct)
+  }
+
+  test("malformed UTF-8 decodes as the composed form does") {
+    def b(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
+    val ascii = "ab  c ".getBytes("UTF-8")
+    val tails = Seq(
+      b(0xff), b(0xc3), b(0xe2, 0x80), b(0xe2, 0x80, 0x20, 0x61),
+      b(0xed, 0xa0, 0x80, 0x7a), b(0xf0, 0x9f, 0x98), b(0x80, 0x80, 0x20),
+      b(0xc2, 0xa0, 0xff, 0xc2, 0xa0, 0x78), b(0xc3, 0xa9, 0x20, 0xfe, 0x20))
+    val inputs = tails.flatMap(t => Seq(t, ascii ++ t, ascii ++ t ++ ascii, b(0x20) ++ t))
+    val rows = spark.sparkContext
+      .parallelize(inputs.map(org.apache.spark.sql.Row(_)), 4)
+    val df = spark.createDataFrame(rows,
+      StructType(Seq(StructField("b", BinaryType))))
+      .select(col("b").cast(StringType).as("v"))
+    diffFrame(df, inputs.length)
   }
 }
