@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark main: runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR, one warmup pass + one measured pass per query
@@ -31,7 +31,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // 1-minute load sampled BEFORE any bench work, so it reflects
     // pre-existing machine activity, not this JVM's own 32 threads —
     // the round-3 driver bench measured 2.9× a clean run purely from
@@ -59,21 +58,7 @@ object Bench {
         loadAtStart = loadNow()
       }
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_BENCH_MODE=session skips the per-query cache
-    // release: queries inherit earlier queries' derive-once artifacts
-    // like a long-lived analytics session would (the round-7
-    // semantics). The gate number stays the default isolated mode.
-    val sessionMode =
-      sys.env.get("SPARK_GRAFT_BENCH_MODE").contains("session")
+    val spark = Sessions.local()
     // SPARK_GRAFT_ONLY=q130,q72 restricts to matching name prefixes —
     // targeted timing during iteration; unset = the full gate.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -84,7 +69,7 @@ object Bench {
       .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
     // when BENCH_DETAIL.json would describe a subset, don't overwrite
     // the full-run detail file
-    val writeDetail = only.isEmpty && !sessionMode
+    val writeDetail = only.isEmpty
     val results = selected.map { case (name, fn) =>
       // every QUERY starts cache-cold: operators cache derive-once
       // artifacts (dedup closure, IVF lists, …) and without this a
@@ -94,10 +79,8 @@ object Bench {
       // Within a query, the warmup may populate the query's OWN
       // caches — the measured number stays the documented
       // steady-state one, but owes nothing to other queries.
-      if (!sessionMode) {
-        graft.util.Caches.releaseAll()
-        spark.catalog.clearCache()
-      }
+      graft.util.Caches.releaseAll()
+      spark.catalog.clearCache()
       def once(): Double = {
         val t0 = System.nanoTime()
         try { force(fn(spark, sfDir)) } catch { case _: Throwable => return -1.0 }
@@ -117,9 +100,8 @@ object Bench {
     // Full-name detail (for humans / PERF.md) — file, not stdout.
     val detail = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
-    val mode = if (sessionMode) "session" else "isolated"
     val detailJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","mode":"$mode","queries":$detail,"sf":"$sfDir","warmup_runs":1,"measured_runs":2,"agg":"min","loadavg_1m":$load}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","mode":"isolated","queries":$detail,"sf":"$sfDir","warmup_runs":1,"measured_runs":2,"agg":"min","loadavg_1m":$load}"""
     if (writeDetail) {
       try java.nio.file.Files.write(
         java.nio.file.Paths.get("BENCH_DETAIL.json"),
@@ -138,7 +120,7 @@ object Bench {
     }.mkString("{", ",", "}")
     spark.sparkContext.setLogLevel("OFF")
     spark.stop()
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"mode":"$mode","queries":$qs,"top_k":15,"detail":"BENCH_DETAIL.json","sf":"$sfDir","warmup_runs":1,"measured_runs":2,"agg":"min","loadavg_1m":$load}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"mode":"isolated","queries":$qs,"top_k":15,"detail":"BENCH_DETAIL.json","sf":"$sfDir","warmup_runs":1,"measured_runs":2,"agg":"min","loadavg_1m":$load}""")
     System.out.flush()
   }
 }

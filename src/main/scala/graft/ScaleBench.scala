@@ -2,7 +2,6 @@ package graft
 
 import graft.functions.TextFunctions._
 import graft.functions.VectorMath
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,13 +17,8 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val docMult = args.headOption.map(_.toInt).getOrElse(200)
     val vecMult = args.drop(1).headOption.map(_.toInt).getOrElse(200)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.cpus
+    val spark = Sessions.local()
     val dir = "/root/testdata/sf0.01"
 
     // --- MinHash LSH dedup at ~100k docs -----------------------------
@@ -37,7 +31,7 @@ object ScaleBench {
         (col("doc_id") + col("rep") * 500).as("doc_id"),
         concat(col("text"), lit(" rep"), col("rep") % 7).as("text")
       )
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .cache()
     val nDocs = docs.count()
 
@@ -78,7 +72,7 @@ object ScaleBench {
         (col("vec_id") + col("rep") * 500).as("vec_id"),
         col("embedding")
       )
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .cache()
     val nVecs = vecs.count()
     val q = vecs
@@ -363,7 +357,7 @@ object ScaleBench {
         col("lang"),
         concat(col("text"), lit(" rep"), col("rep") % 7).as("text")
       )
-      .repartition(cpus.toInt)
+      .repartition(cpus)
     val tNb = System.nanoTime()
     val nbScored = graft.operators.TextAnalysis.nbLangIdFrom(nbDocs)
     val nbAgg = nbScored
@@ -490,7 +484,7 @@ object ScaleBench {
         (col("id") * 2654435761L % 1000).cast("double").as("score"))
     val ranked = graft.operators.Ranking
       .withGlobalRank(rankIn.toDF(),
-        Seq(col("score").desc, col("id").asc), "rk", cpus.toInt)
+        Seq(col("score").desc, col("id").asc), "rk", cpus)
       .withColumn("decile",
         graft.operators.Ranking.ntileFromRank(col("rk"), lit(rankN), 10))
     val deciles = ranked
@@ -519,7 +513,7 @@ object ScaleBench {
       .range(pmN)
       .select(col("id").as("event_id"),
         (col("id") * 7919L % 1000003L).as("us"))
-      .repartitionByRange(cpus.toInt, col("event_id").asc)
+      .repartitionByRange(cpus, col("event_id").asc)
       .withColumn("pid", spark_partition_id())
     val wInPm = Window
       .partitionBy(col("pid"))
@@ -786,7 +780,7 @@ object ScaleBench {
     val ppDocs = ppRaw
       .select(col("doc_id"), shingles(col("text"), 3).as("sh"))
       .filter(size(col("sh")) > 0)
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .cache()
     val ppN = ppDocs.count()
     val tPp = System.nanoTime()
@@ -861,7 +855,7 @@ object ScaleBench {
                   lit(1.0)).otherwise(lit(-1.0))).cast("float")))
           .as("emb")
       )
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .cache()
     val msN = msVecs.count()
     val tMs = System.nanoTime()
@@ -1151,7 +1145,7 @@ object ScaleBench {
               (col("rep") % 5).cast("string")))
           .as("text")
       )
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .localCheckpoint(true)
     val tLed = System.nanoTime()
     val wExact = Window.partitionBy(md5(col("text")))
@@ -1221,7 +1215,7 @@ object ScaleBench {
       .select(lit(hubId).as("u"), (col("id") + hubId + 1).as("v"))
     val graphEdges = triEdges
       .unionByName(spokeEdges)
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .localCheckpoint(true)
     val tTri = System.nanoTime()
     // the seam engine itself (q445/q460/q474 all ride it) — the
@@ -1302,7 +1296,7 @@ object ScaleBench {
         spark
           .range(chainBase, chainBase + bfsChainN - 1)
           .select(col("id").as("u"), (col("id") + 1L).as("v")))
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .localCheckpoint(true)
     val bfsSym = graft.operators.CoPurchaseGraph
       .symmetric(bfsEdges)
@@ -1357,7 +1351,7 @@ object ScaleBench {
           )
           .select(col("e.u").as("u"), col("e.v").as("v"))
       )
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .localCheckpoint(true)
     val tDs = System.nanoTime()
     val dsRows = graft.operators.CoPurchaseGraph
@@ -1395,7 +1389,7 @@ object ScaleBench {
     val lpSym = lpStarEdges
       .select(col("u").as("a"), col("v").as("b"))
       .unionByName(lpStarEdges.select(col("v").as("a"), col("u").as("b")))
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .localCheckpoint(true)
     val tLp = System.nanoTime()
     val lpHist = graft.operators.Communities
@@ -1462,7 +1456,7 @@ object ScaleBench {
     val pprSym = pprStar
       .select(col("u").as("src"), col("v").as("dst"))
       .unionByName(pprStar.select(col("v").as("src"), col("u").as("dst")))
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .localCheckpoint(true)
     import spark.implicits._
     val tPpr = System.nanoTime()
@@ -1530,7 +1524,7 @@ object ScaleBench {
           (col("id") % 8L).cast("double") * 0.0008).as("x"),
         (floor(col("id") / 4000L).cast("double") * 0.1).as("y")
       )
-      .repartition(cpus.toInt)
+      .repartition(cpus)
     val tDb = System.nanoTime()
     val dbAgg = graft.operators.Communities
       .dbscanGridPoints(spark, dbPts)
@@ -1605,7 +1599,7 @@ object ScaleBench {
     val lpkPairs = spark
       .range(lpkSpokes)
       .select(lit(0L).as("doc_a"), (col("id") + 1L).as("doc_b"))
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .localCheckpoint(true)
     val tLpk = System.nanoTime()
     val lpkRows = graft.operators.Dedup

@@ -1,7 +1,6 @@
 package graft
 
 import graft.jira.{JiraFlatten, JiraGenerators, JiraPipeline}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Pipeline throughput benchmark against the reference's own ceiling.
@@ -16,15 +15,8 @@ import org.apache.spark.sql.functions._
 object ThroughputBench {
   def main(args: Array[String]): Unit = {
     val nIssues = args.headOption.map(_.toInt).getOrElse(200000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.cpus
+    val spark = Sessions.local()
 
     val base = JiraPipeline
       .readRaw(spark, s"${JiraPipeline.FixtureDir}/raw_issues_TEST.jsonl")
@@ -34,7 +26,7 @@ object ThroughputBench {
       .withColumn("key", concat(col("key"), lit("-"), col("rep")))
       .withColumn("id", concat(col("id"), lit("-"), col("rep")))
       .drop("rep")
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .cache()
     val total = corpus.count() // materialize input outside the timing
 

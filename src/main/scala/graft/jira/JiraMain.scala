@@ -92,14 +92,7 @@ object JiraMain {
 
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/jira_corpus")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     val r = run(spark, JiraPipeline.fixtureProjects, outDir)
     // pipeline summary (main.py:108-123): counts + corpus size MB +
     // total wall time

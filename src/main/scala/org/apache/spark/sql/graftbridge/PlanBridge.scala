@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
@@ -17,4 +18,10 @@ object PlanBridge {
     )
 
   def analyzed(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
+
+  /** Block until every event posted so far reached the listeners
+    * (`listenerBus` is private[spark]): stage metrics read after an
+    * action must wait for its events.
+    */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -1,198 +1,210 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The extensions entry point must make the custom functions available
   * in SQL on a session built with withExtensions — no manual
   * registration calls.
   */
-class GraftExtensionsSpec extends AnyFunSuite {
+class GraftExtensionsSpec extends AnyFunSuite with SparkSpec {
 
   test("withExtensions(GraftExtensions) exposes vec_dot and jira_tasks") {
-    // extensions are applied only at session creation — drop any
-    // session a previous suite left active so getOrCreate builds a
-    // fresh one with the full injected-function set
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession
-      .builder()
-      .master("local[2]")
-      .appName("extensions-spec")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
-      val d = spark
-        .sql(
-          "SELECT vec_dot(array(CAST(2.0 AS FLOAT)), array(CAST(3.0 AS FLOAT))) AS d"
-        )
-        .collect()(0)
-        .getDouble(0)
-      assert(d == 6.0)
-      val cos = spark
-        .sql(
-          """SELECT vec_cosine(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)),
-                               array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c"""
-        )
-        .collect()(0)
-        .getDouble(0)
-      assert(cos == 1.0)
-      // the SQL function must stay bit-identical to the Column path
-      // (GraftExtensions mirrors VectorMath.vecCosine expression-level)
-      val sqlCos = spark
-        .sql(
-          """SELECT vec_cosine(array(CAST(0.3 AS FLOAT), CAST(-1.7 AS FLOAT), CAST(2.9 AS FLOAT)),
-                               array(CAST(1.1 AS FLOAT), CAST(0.2 AS FLOAT), CAST(-0.4 AS FLOAT))) AS c"""
-        )
-        .collect()(0)
-        .getDouble(0)
-      import org.apache.spark.sql.functions.{array, lit}
-      val colCos = spark
-        .range(1)
-        .select(
-          graft.functions.VectorMath
-            .vecCosine(
-              array(lit(0.3f), lit(-1.7f), lit(2.9f)),
-              array(lit(1.1f), lit(0.2f), lit(-0.4f))
-            )
-            .as("c")
-        )
-        .collect()(0)
-        .getDouble(0)
-      assert(sqlCos == colCos)
-      val mh = spark
-        .sql("SELECT minhash_sig(array('a b c', 'b c d'), 4) AS sig")
-        .collect()(0)
-        .getAs[collection.Seq[Long]]("sig")
-      assert(mh.length == 4)
-      val mt = spark
-        .sql("SELECT minhash_text('a b c d', 3, 4) AS sig")
-        .collect()(0)
-        .getAs[collection.Seq[Long]]("sig")
-      assert(mt == mh, "fused text signature == array signature of its shingles")
-      val sh = spark
-        .sql("SELECT simhash_text('hello world', 16) AS s")
-        .collect()(0)
-        .getLong(0)
-      assert(sh >= 0L && sh < (1L << 16))
-      val ts = spark
-        .sql("SELECT text_stats('the quick fox.').n_tokens AS n," +
-          " text_stats('the quick fox.').n_stop AS st," +
-          " lang_counts('the of la').s_en AS en," +
-          " repetition_counts('a b a b').n_distinct_bigrams AS db")
-        .collect()(0)
-      assert(ts.getLong(0) == 3 && ts.getLong(1) == 1)
-      assert(ts.getLong(2) == 2)
-      assert(ts.getLong(3) == 2)
-      val shingled = spark
-        .sql("SELECT shingles('a b c d', 3) AS sh")
-        .collect()(0)
-        .getAs[collection.Seq[String]]("sh")
-      assert(shingled == Seq("a b c", "b c d"))
-      val h60 = spark
-        .sql("SELECT hash60('x') AS h")
-        .collect()(0)
-        .getLong(0)
-      // first 15 hex chars of md5('x') = 9dd4e461268c8034
-      assert(h60 == java.lang.Long.parseUnsignedLong("9dd4e461268c803", 16))
-      val rh = spark
-        .sql("SELECT rolling_hash('abc') AS h")
-        .collect()(0)
-        .getLong(0)
-      // ((0*31+97)*31+98)*31+99 mod 1e9+7
-      assert(rh == ((97L * 31 + 98) * 31 + 99) % 1000000007L)
-      val flat = jira.JiraFlatten.flatten(
-        jira.JiraPipeline.readRaw(
-          spark,
-          s"${jira.JiraPipeline.FixtureDir}/raw_issues_TEST.jsonl"
-        ),
-        "TEST"
+    val d = spark
+      .sql(
+        "SELECT vec_dot(array(CAST(2.0 AS FLOAT)), array(CAST(3.0 AS FLOAT))) AS d"
       )
-      flat.createOrReplaceTempView("iss_ext")
-      val n = spark
-        .sql(
-          s"""SELECT count(*) FROM iss_ext
-              LATERAL VIEW jira_tasks(struct(${flat.columns.mkString(", ")})) v AS t"""
-        )
-        .collect()(0)
-        .getLong(0)
-      assert(n == 45L)
-    } finally {
-      // the shared-JVM session for other suites is rebuilt on demand
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-    }
+      .collect()(0)
+      .getDouble(0)
+    assert(d == 6.0)
+    val cos = spark
+      .sql(
+        """SELECT vec_cosine(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)),
+                             array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c"""
+      )
+      .collect()(0)
+      .getDouble(0)
+    assert(cos == 1.0)
+    // the SQL function must stay bit-identical to the Column path
+    // (GraftExtensions mirrors VectorMath.vecCosine expression-level)
+    val sqlCos = spark
+      .sql(
+        """SELECT vec_cosine(array(CAST(0.3 AS FLOAT), CAST(-1.7 AS FLOAT), CAST(2.9 AS FLOAT)),
+                             array(CAST(1.1 AS FLOAT), CAST(0.2 AS FLOAT), CAST(-0.4 AS FLOAT))) AS c"""
+      )
+      .collect()(0)
+      .getDouble(0)
+    import org.apache.spark.sql.functions.{array, lit}
+    val colCos = spark
+      .range(1)
+      .select(
+        graft.functions.VectorMath
+          .vecCosine(
+            array(lit(0.3f), lit(-1.7f), lit(2.9f)),
+            array(lit(1.1f), lit(0.2f), lit(-0.4f))
+          )
+          .as("c")
+      )
+      .collect()(0)
+      .getDouble(0)
+    assert(sqlCos == colCos)
+    val mh = spark
+      .sql("SELECT minhash_sig(array('a b c', 'b c d'), 4) AS sig")
+      .collect()(0)
+      .getAs[collection.Seq[Long]]("sig")
+    assert(mh.length == 4)
+    val mt = spark
+      .sql("SELECT minhash_text('a b c d', 3, 4) AS sig")
+      .collect()(0)
+      .getAs[collection.Seq[Long]]("sig")
+    assert(mt == mh, "fused text signature == array signature of its shingles")
+    val sh = spark
+      .sql("SELECT simhash_text('hello world', 16) AS s")
+      .collect()(0)
+      .getLong(0)
+    assert(sh >= 0L && sh < (1L << 16))
+    val ts = spark
+      .sql("SELECT text_stats('the quick fox.').n_tokens AS n," +
+        " text_stats('the quick fox.').n_stop AS st," +
+        " lang_counts('the of la').s_en AS en," +
+        " repetition_counts('a b a b').n_distinct_bigrams AS db")
+      .collect()(0)
+    assert(ts.getLong(0) == 3 && ts.getLong(1) == 1)
+    assert(ts.getLong(2) == 2)
+    assert(ts.getLong(3) == 2)
+    val shingled = spark
+      .sql("SELECT shingles('a b c d', 3) AS sh")
+      .collect()(0)
+      .getAs[collection.Seq[String]]("sh")
+    assert(shingled == Seq("a b c", "b c d"))
+    val h60 = spark
+      .sql("SELECT hash60('x') AS h")
+      .collect()(0)
+      .getLong(0)
+    // first 15 hex chars of md5('x') = 9dd4e461268c8034
+    assert(h60 == java.lang.Long.parseUnsignedLong("9dd4e461268c803", 16))
+    val rh = spark
+      .sql("SELECT rolling_hash('abc') AS h")
+      .collect()(0)
+      .getLong(0)
+    // ((0*31+97)*31+98)*31+99 mod 1e9+7
+    assert(rh == ((97L * 31 + 98) * 31 + 99) % 1000000007L)
+    val flat = jira.JiraFlatten.flatten(
+      jira.JiraPipeline.readRaw(
+        spark,
+        s"${jira.JiraPipeline.FixtureDir}/raw_issues_TEST.jsonl"
+      ),
+      "TEST"
+    )
+    flat.createOrReplaceTempView("iss_ext")
+    val n = spark
+      .sql(
+        s"""SELECT count(*) FROM iss_ext
+            LATERAL VIEW jira_tasks(struct(${flat.columns.mkString(", ")})) v AS t"""
+      )
+      .collect()(0)
+      .getLong(0)
+    assert(n == 45L)
   }
 
   test("VecSqDistRewrite strength-reduces the HOF fold to vec_sq_dist") {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession
-      .builder()
-      .master("local[2]")
-      .appName("vecsqdist-rewrite-spec")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
-      import org.apache.spark.sql.functions._
-      val df = spark
-        .range(5)
-        .select(
-          col("id"),
-          transform(
-            sequence(lit(0), lit(63)),
-            i => (i + col("id")).cast("float")
-          ).as("x"),
-          transform(
-            sequence(lit(0), lit(63)),
-            i => i.cast("double") * 0.5
-          ).as("c")
-        )
-      // float×double: the HOF's inserted cast is part of the pattern
-      val q = df.select(
-        graft.operators.Clustering.sqDistHof(col("x"), col("c")).as("d"))
-      assert(
-        q.queryExecution.optimizedPlan.toString.contains("vec_sq_dist"),
-        q.queryExecution.optimizedPlan.toString)
-      val viaRule = q.collect().map(_.getDouble(0)).toSeq
-      val direct = df
-        .select(graft.functions.VectorMath
-          .vecSqDist(col("x"), col("c")).as("d"))
+    import org.apache.spark.sql.functions._
+    val df = spark
+      .range(5)
+      .select(
+        col("id"),
+        transform(
+          sequence(lit(0), lit(63)),
+          i => (i + col("id")).cast("float")
+        ).as("x"),
+        transform(
+          sequence(lit(0), lit(63)),
+          i => i.cast("double") * 0.5
+        ).as("c")
+      )
+    // float×double: the HOF's inserted cast is part of the pattern
+    val q = df.select(
+      graft.operators.Clustering.sqDistHof(col("x"), col("c")).as("d"))
+    assert(
+      q.queryExecution.optimizedPlan.toString.contains("vec_sq_dist"),
+      q.queryExecution.optimizedPlan.toString)
+    val viaRule = q.collect().map(_.getDouble(0)).toSeq
+    // reference: the same fold evaluated as written
+    val direct = withoutRewrites {
+      df.select(graft.operators.Clustering.sqDistHof(col("x"), col("c")))
         .collect()
         .map(_.getDouble(0))
         .toSeq
-      assert(viaRule == direct)
-      // double×double (the IVF-PQ residual layout) rewrites too
-      val q2 = df.select(
-        graft.operators.Clustering
-          .sqDistHof(transform(col("x"), e => e.cast("double")), col("c"))
-          .as("d"))
-      assert(
-        q2.queryExecution.optimizedPlan.toString.contains("vec_sq_dist"),
-        q2.queryExecution.optimizedPlan.toString)
-      assert(q2.collect().map(_.getDouble(0)).toSeq == direct)
-      // and the dot-product fold rewrites to vec_dot (float×float)
-      val df2 = df.select(
-        col("x"),
-        transform(col("x"), e => e * 2.0f).as("y"))
-      val q3 = df2.select(
-        graft.operators.Similarity.dotProductHof(col("x"), col("y")).as("d"))
-      assert(
-        q3.queryExecution.optimizedPlan.toString.contains("vec_dot"),
-        q3.queryExecution.optimizedPlan.toString)
-      val dotDirect = df2
-        .select(graft.functions.VectorMath.vecDot(col("x"), col("y")).as("d"))
-        .collect()
-        .map(_.getDouble(0))
-        .toSeq
-      assert(q3.collect().map(_.getDouble(0)).toSeq == dotDirect)
-    } finally {
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
     }
+    assert(viaRule == direct)
+    // double×double (the IVF-PQ residual layout) rewrites too
+    val q2 = df.select(
+      graft.operators.Clustering
+        .sqDistHof(transform(col("x"), e => e.cast("double")), col("c"))
+        .as("d"))
+    assert(
+      q2.queryExecution.optimizedPlan.toString.contains("vec_sq_dist"),
+      q2.queryExecution.optimizedPlan.toString)
+    assert(q2.collect().map(_.getDouble(0)).toSeq == direct)
+    // and the dot-product fold rewrites to vec_dot (float×float)
+    val df2 = df.select(
+      col("x"),
+      transform(col("x"), e => e * 2.0f).as("y"))
+    val q3 = df2.select(
+      graft.operators.Similarity.dotProductHof(col("x"), col("y")).as("d"))
+    assert(
+      q3.queryExecution.optimizedPlan.toString.contains("vec_dot"),
+      q3.queryExecution.optimizedPlan.toString)
+    val dotDirect = withoutRewrites {
+      df2.select(graft.operators.Similarity.dotProductHof(col("x"), col("y")))
+        .collect()
+        .map(_.getDouble(0))
+        .toSeq
+    }
+    assert(q3.collect().map(_.getDouble(0)).toSeq == dotDirect)
+  }
+
+  test("Sessions.local is idempotent and builds the production shape") {
+    assert(Sessions.local(4) eq spark)
+    assert(Sessions.local() eq spark, "a later call keeps the live session")
+    assert(spark.sparkContext.master == "local[4]")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    // the injected functions resolve in SQL on the shared session
+    assert(spark.sql("SELECT vec_dot(array(CAST(1.0 AS FLOAT)), " +
+      "array(CAST(4.0 AS FLOAT)))").collect()(0).getDouble(0) == 4.0)
+    assert(spark.sessionState.functionRegistry
+      .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(
+        "jira_tasks")))
+  }
+
+  test("sessions are built only by Sessions and never stopped in specs") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    def sources(root: String): Seq[Path] = {
+      val s = Files.walk(Paths.get(root))
+      try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+      finally s.close()
+    }
+    // code lines only: scaladoc may show the builder to deployers
+    def hits(files: Seq[Path], pattern: String): Seq[String] =
+      files.flatMap { f =>
+        Files.readAllLines(f, java.nio.charset.StandardCharsets.ISO_8859_1)
+          .asScala.zipWithIndex.collect {
+            case (l, i) if !l.trim.startsWith("*") &&
+                !l.trim.startsWith("//") && pattern.r.findFirstIn(l).nonEmpty =>
+              s"$f:${i + 1}: ${l.trim}"
+          }
+      }
+    val main = sources("src/main/scala")
+    val test = sources("src/test/scala")
+    assert(main.nonEmpty && test.nonEmpty)
+    val builders = hits(
+      (main ++ test).filterNot(_.getFileName.toString == "Sessions.scala"),
+      """SparkSession\s*\.builder|\.builder\(\)""")
+    assert(builders.isEmpty, builders.mkString("\n"))
+    val stops = hits(test,
+      """\.stop\(\)|clear(Active|Default)Session""")
+    assert(stops.isEmpty, stops.mkString("\n"))
   }
 }

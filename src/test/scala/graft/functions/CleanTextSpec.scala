@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.SparkSpec
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
@@ -16,14 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (CleanTextUnicodeSpec covers those). Both the codegen path (a
   * non-local scan) and interpreted `eval` are checked.
   */
-class CleanTextSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CleanTextSpec extends AnyFunSuite with SparkSpec {
 
   private def composed(c: Column): Column =
     coalesce(trim(regexp_replace(c, "(?U)\\s+", " ")), lit(""))

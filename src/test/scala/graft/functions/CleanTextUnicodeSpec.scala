@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,14 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * `\s` misses, and the information separators U+001C–U+001F that
   * even Java's `(?U)\s` misses.
   */
-class CleanTextUnicodeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CleanTextUnicodeSpec extends AnyFunSuite with SparkSpec {
 
   // Python 3 str.split() splits on exactly the code points for which
   // str.isspace() is true — listed here by hand, so this oracle shares

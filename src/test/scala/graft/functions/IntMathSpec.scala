@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,14 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * floor on any engine regardless of its native signed-division
   * rule. The half-up ladder is asserted against BigDecimal HALF_UP.
   */
-class IntMathSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IntMathSpec extends AnyFunSuite with SparkSpec {
 
   private def eval1(c: org.apache.spark.sql.Column): Long = {
     import spark.implicits._

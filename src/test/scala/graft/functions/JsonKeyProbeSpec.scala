@@ -1,7 +1,8 @@
 package graft.functions
 
+import graft.SparkSpec
 import graft.jira.JiraPipeline
-import org.apache.spark.sql.{Column, Row, SparkSession}
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
@@ -17,14 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * absent, null, non-object, duplicated and malformed input. Both the
   * codegen path (a non-local scan) and interpreted `eval` are checked.
   */
-class JsonKeyProbeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class JsonKeyProbeSpec extends AnyFunSuite with SparkSpec {
 
   private def composedFields(v: Column): Column =
     json_object_keys(get_json_object(v, "$.fields"))

@@ -1,8 +1,7 @@
 package graft.functions
 
-import graft.Tables
+import graft.{SparkSpec, Tables}
 import graft.operators.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,14 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ORACLE-GATED path (q22/q70/q181/q198), so equality here is what
   * keeps the DuckDB compare green.
   */
-class Md5MinHashSigSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Md5MinHashSigSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
 

@@ -1,8 +1,7 @@
 package graft.functions
 
-import graft.Tables
+import graft.{SparkSpec, Tables}
 import graft.operators.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the interpreted xxhash64 HOF formulation it replaces (same
   * differential contract VectorMathSpec applies to vec_dot).
   */
-class MinHashSigSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MinHashSigSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
 

@@ -1,8 +1,7 @@
 package graft.functions
 
-import graft.Tables
+import graft.{SparkSpec, Tables}
 import graft.operators.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the composed shingles→MinHashSig pipeline on every document, and
   * must be null exactly where the shingle set is empty.
   */
-class MinHashTextSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MinHashTextSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
 

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.SparkSpec
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ORDER BY/LIMIT replay agree bit-for-bit. Plus the sampling error
   * bound on real data.
   */
-class QuantileSketchSpec extends AnyFunSuite {
+class QuantileSketchSpec extends AnyFunSuite with SparkSpec {
 
   private def check(p: Prop): Unit = {
     val res = SCTest.check(
@@ -75,12 +76,6 @@ class QuantileSketchSpec extends AnyFunSuite {
     // of sf0.001 lineitem prices; for each five-point estimate, its
     // TRUE rank among all n values must sit within 4n/√k of the
     // target rank (Hoeffding at k = 256 → ±n/4; observed ~n/50).
-    val spark = org.apache.spark.sql.SparkSession
-      .builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     val dir = "/root/testdata/sf0.001"
     val rows = graft.operators.Sketches
       .quantileSketchAudit(spark, dir)

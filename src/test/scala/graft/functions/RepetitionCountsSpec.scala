@@ -1,22 +1,14 @@
 package graft.functions
 
-import graft.Tables
+import graft.{SparkSpec, Tables}
 import graft.operators.TextAnalysis
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Fused repetition counts + Catalyst fractions must equal the column
   * repetitionStats on every document.
   */
-class RepetitionCountsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RepetitionCountsSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
 

@@ -1,7 +1,6 @@
 package graft.functions
 
-import graft.Tables
-import org.apache.spark.sql.SparkSession
+import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (array_distinct keeps first occurrence) — on the corpus and on
   * adversarial whitespace/unicode edges the corpus lacks.
   */
-class ShinglesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ShinglesSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
 

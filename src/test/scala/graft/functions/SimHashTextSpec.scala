@@ -1,21 +1,14 @@
 package graft.functions
 
-import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{SparkSpec, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The in-row SimHash must agree bit-for-bit with the explode+groupBy
   * vote formulation it replaces (same xxhash64 token hash).
   */
-class SimHashTextSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SimHashTextSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
 

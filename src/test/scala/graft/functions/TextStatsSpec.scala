@@ -1,21 +1,13 @@
 package graft.functions
 
-import graft.Tables
-import org.apache.spark.sql.SparkSession
+import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The fused count expression + Catalyst quality formula must equal
   * the column pipeline bit-for-bit, counts and score alike.
   */
-class TextStatsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TextStatsSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
 

@@ -1,7 +1,6 @@
 package graft.io
 
-import graft.Tables
-import org.apache.spark.sql.SparkSession
+import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -10,14 +9,7 @@ import java.nio.file.Files
   * bucketed+sorted by the key → sort-merge join with zero Exchange
   * (and zero Sort) operators in the executed plan.
   */
-class BucketingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BucketingSpec extends AnyFunSuite with SparkSpec {
 
   test("bucketed join plans with no exchange and matches plain join") {
     val work = Files.createTempDirectory("graft_buckets").toString

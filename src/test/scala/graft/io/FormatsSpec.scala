@@ -1,7 +1,6 @@
 package graft.io
 
-import graft.Tables
-import org.apache.spark.sql.SparkSession
+import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -10,14 +9,7 @@ import java.nio.file.Files
   * "every source/sink"): round-trip the same frame through each
   * built-in columnar/text format and the K1 raw-array form.
   */
-class FormatsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FormatsSpec extends AnyFunSuite with SparkSpec {
 
   private def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))

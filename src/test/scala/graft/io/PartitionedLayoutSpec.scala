@@ -1,7 +1,6 @@
 package graft.io
 
-import graft.Tables
-import org.apache.spark.sql.SparkSession
+import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,14 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * overwrite: rewriting one partition leaves the others' files
   * untouched.
   */
-class PartitionedLayoutSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PartitionedLayoutSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
 

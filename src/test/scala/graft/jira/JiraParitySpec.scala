@@ -1,7 +1,8 @@
 package graft.jira
 
+import graft.SparkSpec
 import graft.functions.TextFunctions
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,15 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (tools/make_jira_fixtures.py). Mirrors test_scrapper.py's cases
   * plus the edge-case fixture variants from FIXTURES.md.
   */
-class JiraParitySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class JiraParitySpec extends AnyFunSuite with SparkSpec {
 
   val dir = JiraPipeline.FixtureDir
 

@@ -1,20 +1,14 @@
 package graft.jira
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import graft.SparkSpec
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The SQL-exposed fan-out (LATERAL VIEW jira_tasks) must produce
   * exactly the column-expression generator's examples.
   */
-class JiraTasksGeneratorSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class JiraTasksGeneratorSpec extends AnyFunSuite with SparkSpec {
 
   test("LATERAL VIEW jira_tasks ≡ column-expression generator") {
     JiraTasksGenerator.register(spark)

@@ -1,22 +1,18 @@
 package graft.jira
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Corrupt-record quarantine on the raw JSON ingest path: malformed
   * lines must become quarantine rows, never job failures, and must
   * not contaminate the parsed frame.
   */
-class QuarantineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class QuarantineSpec extends AnyFunSuite with SparkSpec {
 
   test("malformed JSON lines land in quarantine; valid lines parse") {
+    // the session is shared by every suite: earlier suites' RDDs
+    // (e.g. operator localCheckpoints) may still be persisted
+    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val dir = java.nio.file.Files
       .createTempDirectory("graft-quarantine")
       .toFile
@@ -45,7 +41,8 @@ class QuarantineSpec extends AnyFunSuite {
     val flat = JiraFlatten.flatten(parsed, "TEST")
     assert(flat.count() == 2)
     // releasing drops the backing cache so it stops pinning memory
+    assert(!spark.sparkContext.getPersistentRDDs.keySet.subsetOf(pinnedBefore))
     release()
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(pinnedBefore))
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,14 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * divergence risk) fails here. Plus semantics of the new bounded
   * truss peel and the extracted BFS engine on hand-built graphs.
   */
-class CoPurchaseGraphSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CoPurchaseGraphSpec extends AnyFunSuite with SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 

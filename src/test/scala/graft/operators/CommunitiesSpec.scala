@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,14 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * strictly-after semantics, and the greedy cover's marginal-gain
   * argmax.
   */
-class CommunitiesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CommunitiesSpec extends AnyFunSuite with SparkSpec {
 
   private def sym(edges: Seq[(Long, Long)]) = {
     import spark.implicits._

@@ -1,20 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** ConnectedComponents must agree with a driver-side union-find on
   * random graphs (seeded) and on adversarial shapes: chains (worst
   * diameter), singletons, duplicate/self-loop edges, merging stars.
   */
-class ConnectedComponentsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ConnectedComponentsSpec extends AnyFunSuite with SparkSpec {
 
   /** Reference union-find. */
   private def ufLabels(

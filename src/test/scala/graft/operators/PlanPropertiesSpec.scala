@@ -1,7 +1,6 @@
 package graft.operators
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSpec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Regression guard for the 100 TB plan properties (PERF.md): filter
@@ -10,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * codegen/stage structure post-execution, but pushdown/pruning/
   * TakeOrdered are visible in the initial physical plan).
   */
-class PlanPropertiesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PlanPropertiesSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * single-partition window it replaces — including heavy ties, N < k,
   * N % k != 0, and N divisible by k.
   */
-class RankingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RankingSpec extends AnyFunSuite with SparkSpec {
 
   private def checkAgainstWindow(n: Int, k: Int, distinctVals: Int): Unit = {
     import spark.implicits._

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-12 graph additions on hand-built graphs with pencil-checked
@@ -10,14 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * plan-identity pins that q487/q489 read the shared co-purchase
   * edge seam rather than re-deriving it.
   */
-class Round12GraphSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round12GraphSpec extends AnyFunSuite with SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,14 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (the steady-state reuse), different plans → a fresh computation,
   * releaseAll → a fresh computation.
   */
-class Round13OpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round13OpsSpec extends AnyFunSuite with SparkSpec {
 
   // K4 on {0,1,2,3} + pendant triangle {4,5,6} + bridge 3-4:
   // 4 + 1 = 5 triangles, known support classes

@@ -1,7 +1,6 @@
 package graft.operators
 
-import graft.Tables
-import org.apache.spark.sql.SparkSession
+import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,15 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Round-4 operators: rolling RANGE windows, funnels, canonical-doc
   * selection, percentiles, histogram, posting lists.
   */
-class Round4OpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round4OpsSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
 
@@ -200,7 +191,6 @@ class Round4OpsSpec extends AnyFunSuite {
   }
 
   test("streaming funnel terminal state equals the batch funnel") {
-    SparkSession.clearActiveSession()
     val streamed = graft.streaming.EventStreams
       .runAvailableNow(
         graft.streaming.EventStreams
@@ -268,7 +258,6 @@ class Round4OpsSpec extends AnyFunSuite {
   }
 
   test("stream-static segmentActivity matches the batch join+aggregate") {
-    SparkSession.clearActiveSession()
     val events = graft.streaming.EventStreams.readEvents(spark, dir)
     val streamed = graft.streaming.EventStreams
       .runAvailableNow(

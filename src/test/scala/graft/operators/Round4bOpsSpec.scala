@@ -1,8 +1,7 @@
 package graft.operators
 
-import graft.Tables
+import graft.{SparkSpec, Tables}
 import graft.functions.TextFunctions
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,15 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * int8 quantization, cohort retention, span dedup, weighted
   * sampling, z-order layout.
   */
-class Round4bOpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round4bOpsSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
 

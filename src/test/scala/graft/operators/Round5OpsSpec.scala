@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,15 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the DuckDB oracle cannot see — internal consistency between the
   * emitted columns, self-match properties, and scale-shape contracts.
   */
-class Round5OpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round5OpsSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
 

@@ -1,7 +1,6 @@
 package graft.operators
 
-import graft.Tables
-import org.apache.spark.sql.SparkSession
+import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,15 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * gate-agreement matrix (q190), epoch-order reproducibility (q191),
   * embedding decontamination (q192), and bootstrap CIs (q193).
   */
-class Round7bOpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round7bOpsSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
 

@@ -1,7 +1,7 @@
 package graft.operators
 
-import graft.SparkEntry
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{SparkEntry, SparkSpec}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window => LWindow}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,14 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * unrelated plan text — see ADVICE r9) so a refactor cannot
   * silently regress them.
   */
-class Round9PlanSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round9PlanSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
 

@@ -1,20 +1,12 @@
 package graft.operators
 
-import graft.Tables
+import graft.{SparkSpec, Tables}
 import graft.io.Sinks
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
-class SinksAndMultimodalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SinksAndMultimodalSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
 

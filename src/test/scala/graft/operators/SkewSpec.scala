@@ -1,19 +1,11 @@
 package graft.operators
 
-import graft.Tables
+import graft.{SparkSpec, Tables}
 import graft.functions.GraftFunctions
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class SkewSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SkewSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
 

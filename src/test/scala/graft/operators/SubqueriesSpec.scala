@@ -1,20 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Dir-scoped view registration for the spark.sql subquery surface:
   * two callers on different data dirs in one session must not clobber
   * each other's views, even when their invocations interleave.
   */
-class SubqueriesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SubqueriesSpec extends AnyFunSuite with SparkSpec {
 
   test("interleaved invocations on different dirs stay independent") {
     val small = "/root/testdata/sf0.001"

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,19 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * null arrays, empties) — and must leave non-string element types
   * alone.
   */
-class ArrayIntersectSizeRewriteSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession
-      .builder()
-      .master("local[2]")
-      .appName("ais-rewrite-spec")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-  }
+class ArrayIntersectSizeRewriteSpec extends AnyFunSuite with SparkSpec {
 
   private val rows = Seq[(Seq[String], Seq[String])](
     (Seq("a", "b", "c"), Seq("b", "c", "d")),

@@ -1,7 +1,7 @@
 package graft.plans
 
+import graft.SparkSpec
 import graft.operators.Events
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,16 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the injected planner strategy) against its window-merge executable
   * spec, plus plan-shape and edge-semantics pins.
   */
-class AsOfJoinSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new graft.GraftExtensions)
-    .getOrCreate()
+class AsOfJoinSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
 

@@ -1,7 +1,7 @@
 package graft.sources.jira
 
+import graft.SparkSpec
 import graft.jira.{JiraFlatten, JiraPipeline}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,14 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * incremental mode — all against the file-backed stub transport
   * (test_scrapper.py:91-113 coverage, SURVEY §2.1/§2.9).
   */
-class JiraSourceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class JiraSourceSpec extends AnyFunSuite with SparkSpec {
 
   val stubDir = s"${JiraPipeline.FixtureDir}/stub_TEST"
 

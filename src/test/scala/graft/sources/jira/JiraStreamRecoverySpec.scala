@@ -1,7 +1,7 @@
 package graft.sources.jira
 
+import graft.SparkSpec
 import graft.jira.JiraPipeline
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.{Files, Paths}
@@ -12,14 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * from Spark's offset log. A restarted query must read ONLY issues
   * that arrived after the committed offset — never re-reading pages.
   */
-class JiraStreamRecoverySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class JiraStreamRecoverySpec extends AnyFunSuite with SparkSpec {
 
   private def rawIssueLines: Seq[String] =
     Files

@@ -1,7 +1,7 @@
 package graft.streaming
 
+import graft.SparkSpec
 import graft.operators.Events
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,15 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Streaming ≡ batch equivalence over the static events table driven
   * through the file streaming source (SURVEY §2.9).
   */
-class EventStreamsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EventStreamsSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
 

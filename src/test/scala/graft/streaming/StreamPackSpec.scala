@@ -1,22 +1,14 @@
 package graft.streaming
 
+import graft.SparkSpec
 import graft.operators.{Clustering, Sampling, TextAnalysis}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Behavioral specs for the round-8 online/shape batch
   * (q231, q232, q233, q234).
   */
-class StreamPackSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamPackSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
 

@@ -1,22 +1,14 @@
 package graft.streaming
 
+import graft.SparkSpec
 import graft.operators.{Dedup, QualityLR, TextAnalysis}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** q217 (streaming LR admission) and q218 (cluster quality spread)
   * behavioral specs.
   */
-class StreamQualityGateSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamQualityGateSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
 

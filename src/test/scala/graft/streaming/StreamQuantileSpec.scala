@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** q486: the streamed bottom-k sketch's terminal state must equal the
@@ -8,15 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * pin: however the file stream splits the input into batches, the
   * kept multiset is the same K smallest (hash, value) pairs.
   */
-class StreamQuantileSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamQuantileSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
 

@@ -1,27 +1,23 @@
 package graft.util
 
+import graft.SparkSpec
 import graft.operators.TextAnalysis
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The round-7 verdict's cache-lifecycle directive: operator-internal
   * caches must be releasable once a query's outputs are materialized —
   * no lingering cached RDDs after [[Caches.releaseAll]].
   */
-class CachesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CachesSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
 
   test("operator caches are tracked and releaseAll leaves nothing pinned") {
     Caches.releaseAll()
     spark.catalog.clearCache()
+    // the session is shared by every suite: earlier suites' untracked
+    // RDDs (operator localCheckpoints) may still be persisted
+    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
     // a cache-heavy operator: the perplexity chain tracks its token
     // frame and per-doc trigram counts
     val n = TextAnalysis.trigramPerplexity(spark, dir).count()
@@ -32,8 +28,8 @@ class CachesSpec extends AnyFunSuite {
     // nothing left in the session cache manager…
     assert(spark.sharedState.cacheManager.isEmpty, "cacheManager not empty")
     // …and no cached RDD blocks surviving the blocking unpersist
-    val cachedRdds = spark.sparkContext.getPersistentRDDs
-    assert(cachedRdds.isEmpty, s"lingering RDDs: ${cachedRdds.keys}")
+    val cachedRdds = spark.sparkContext.getPersistentRDDs.keySet -- pinnedBefore
+    assert(cachedRdds.isEmpty, s"lingering RDDs: $cachedRdds")
   }
 
   test("a second query after releaseAll re-derives instead of erroring") {
