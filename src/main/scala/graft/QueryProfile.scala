@@ -1,7 +1,10 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.execution.{ExplainMode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.graftbridge.PlanBridge
 import scala.collection.mutable.ArrayBuffer
 
@@ -17,8 +20,14 @@ import scala.collection.mutable.ArrayBuffer
   *   - `plan_s`, `hash_exchanges`, `joins`: optimize+plan time of that
   *     construction and the join strategies/exchanges of its physical
   *     plan.
+  *   - `codegen_fallback`: the physical operators of that plan (and its
+  *     subqueries) holding a `CodegenFallback` expression, as
+  *     `Operator[expr,...]`; such an operator stays out of whole-stage
+  *     codegen.
   *   - `cold`, `warm`: run 1 and runs 2..N, each constructed afresh and
-  *     forced with [[Bench.force]], with its row count.
+  *     forced with [[Bench.force]], with its row count and
+  *     `janino_compiles`, the classes Janino compiled during the run
+  *     (`CodegenMetrics`; a codegen cache hit compiles nothing).
   *   - `--stages TOP`: the last run's TOP stages by summed task time
   *     (the local stand-in for the Spark UI's stage table).
   *   - `--plan MODE`: the explain string (simple, extended, codegen,
@@ -95,9 +104,13 @@ object QueryProfile {
         stages.clear()
         val timed = (1 to runs).map { i =>
           record = i == runs && stagesTop > 0
+          val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
           val t0 = System.nanoTime()
           val rows = Bench.force(fn(spark, sfDir))
-          s"""{"s":${secs(t0)},"rows":$rows}"""
+          val s = secs(t0)
+          val compiles =
+            CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+          s"""{"s":$s,"rows":$rows,"janino_compiles":$compiles}"""
         }
         record = false
         PlanBridge.drainListeners(spark.sparkContext)
@@ -125,6 +138,8 @@ object QueryProfile {
           .map(l => q(l.takeWhile(_ != '[').take(90)))
         val exchanges =
           physical.linesIterator.count(_.contains("Exchange hashpartitioning"))
+        val fallbacks = fallbackOperators(df.queryExecution.executedPlan)
+          .map(q)
         val stageRows = stages.toSeq.sortBy(-_._1).take(stagesTop).map(_._2)
         Seq(
           Some(s""""query":${q(name)},"sf":${q(sfDir)}"""),
@@ -132,6 +147,7 @@ object QueryProfile {
             s""""cached_subtrees":$cached"""),
           Some(s""""plan_s":$planS,"hash_exchanges":$exchanges,""" +
             s""""joins":${joins.mkString("[", ",", "]")}"""),
+          Some(s""""codegen_fallback":${fallbacks.mkString("[", ",", "]")}"""),
           timed.headOption.map(c => s""""cold":$c"""),
           Some(s""""warm":${timed.drop(1).mkString("[", ",", "]")}"""),
           Option.when(stagesTop > 0)(
@@ -148,4 +164,21 @@ object QueryProfile {
     }
     spark.stop()
   }
+
+  /** The `CodegenFallback` expressions `op` holds, by name: any one
+    * keeps `op` out of whole-stage codegen.
+    */
+  def codegenFallbacks(op: SparkPlan): Seq[String] =
+    op.expressions.flatMap(_.collect { case e: CodegenFallback => e.prettyName })
+      .distinct.sorted
+
+  /** `Operator[expr,...]` for every operator of `plan`, adaptive stages
+    * and subqueries included, that holds a `CodegenFallback` expression.
+    */
+  private def fallbackOperators(plan: SparkPlan): Seq[String] =
+    new AdaptiveSparkPlanHelper {}.collectWithSubqueries(plan) { case p => p }
+      .flatMap { p =>
+        val names = codegenFallbacks(p)
+        Option.when(names.nonEmpty)(s"${p.nodeName}[${names.mkString(",")}]")
+      }
 }

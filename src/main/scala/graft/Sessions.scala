@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
 
 /** The one place a SparkSession is built: every main and every spec
   * gets the production shape from here — `local[cpus]`, shuffle
-  * partitions = cpus, UTC, AQE on, UI off, [[GraftExtensions]] (the
-  * injected functions and optimizer rewrites), log level WARN.
+  * partitions = cpus, UTC, AQE on, UI off, a 2000-entry codegen class
+  * cache, [[GraftExtensions]] (the injected functions and optimizer
+  * rewrites), log level WARN.
   */
 object Sessions {
 
@@ -28,6 +29,10 @@ object Sessions {
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
+        // the default 100 entries is smaller than the distinct generated
+        // classes of a curation round (driver and executor compile
+        // separately), so classes were evicted and recompiled every round
+        .config("spark.sql.codegen.cache.maxEntries", 2000)
         .withExtensions(new GraftExtensions)
         .getOrCreate()
       spark.sparkContext.setLogLevel("WARN")

@@ -1,5 +1,7 @@
 package graft.jira
 
+import graft.functions.CleanComments
+import graft.functions.NameList.nameList
 import graft.functions.TextFunctions.cleanText
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -10,6 +12,19 @@ import org.apache.spark.sql.functions._
   * One wide `select` — Catalyst prunes the nested reads to exactly the
   * accessed struct fields, so at scale this is a streaming map with no
   * shuffle.
+  *
+  * No higher-order functions: `transform`/`filter` are
+  * `CodegenFallback`, and one such expression keeps its whole operator
+  * out of whole-stage codegen; each task then builds its projection
+  * afresh and evaluates the lambdas interpreted (PERF.md, "JiraFlatten
+  * in whole-stage codegen"). The array columns use two
+  * codegen'd kernels instead: `CleanComments` (the whole comment step:
+  * author, created, cleaned body, empty bodies dropped) and `NameList`
+  * (components, versions, fixVersions). The drop filter and the
+  * projection then compile into one stage over the `jira` source; on
+  * the `readRaw` path the projection gets its own stage (its input
+  * Project evaluates `from_json`, which is `CodegenFallback`).
+  * JiraFlattenPlanSpec guards both plans and the output schema.
   *
   * Replicated reference quirks:
   *  - P5: issues whose `status`/`priority`/`issuetype`/`comment`/
@@ -62,12 +77,6 @@ object JiraFlatten {
       .otherwise(coalesce(u.getField("displayName"), u.getField("name"),
         lit("Unknown")))
 
-  private def names(arr: Column): Column =
-    coalesce(
-      transform(arr, o => coalesce(o.getField("name"), lit(""))),
-      array().cast("array<string>")
-    )
-
   def flatten(raw: DataFrame, project: String): DataFrame = {
     val f = col("fields")
     val hasProbes = raw.columns.contains(ProbeFieldsKeys)
@@ -93,21 +102,8 @@ object JiraFlatten {
           .otherwise(defaulted)
       else defaulted
     }
-    val cleanedComments = filter(
-      transform(
-        coalesce(
-          f.getField("comment").getField("comments"),
-          array().cast("array<struct<author:struct<displayName:string,name:string>,created:string,body:string>>")
-        ),
-        c =>
-          struct(
-            userName(c.getField("author")).as("author"),
-            coalesce(c.getField("created"), lit("")).as("created"),
-            cleanText(c.getField("body"), MaxCommentLength).as("body")
-          )
-      ),
-      c => length(c.getField("body")) > 0
-    )
+    val cleanedComments = CleanComments.cleanComments(
+      f.getField("comment").getField("comments"), MaxCommentLength)
     raw
       .filter(!dropRow)
       .select(
@@ -131,9 +127,9 @@ object JiraFlatten {
         coalesce(f.getField("updated"), lit("")).as("updated"),
         coalesce(f.getField("resolutiondate"), lit("")).as("resolved"),
         labelsCol.as("labels"),
-        names(f.getField("components")).as("components"),
-        names(f.getField("versions")).as("versions"),
-        names(f.getField("fixVersions")).as("fix_versions"),
+        nameList(f.getField("components")).as("components"),
+        nameList(f.getField("versions")).as("versions"),
+        nameList(f.getField("fixVersions")).as("fix_versions"),
         cleanedComments.as("comments"),
         size(cleanedComments).as("comment_count")
       )

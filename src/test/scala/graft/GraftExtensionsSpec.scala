@@ -170,6 +170,7 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkSpec {
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "2000")
     // the injected functions resolve in SQL on the shared session
     assert(spark.sql("SELECT vec_dot(array(CAST(1.0 AS FLOAT)), " +
       "array(CAST(4.0 AS FLOAT)))").collect()(0).getDouble(0) == 4.0)

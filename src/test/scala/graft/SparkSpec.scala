@@ -12,22 +12,38 @@ import org.apache.spark.sql.internal.SQLConf
 trait SparkSpec {
   lazy val spark: SparkSession = Sessions.local(4)
 
+  /** Runs `body` with the session settings `kvs`, restoring the
+    * previous values afterwards (the session is shared). Plans are
+    * optimized and compiled when an action runs, so build and collect
+    * inside.
+    */
+  def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Runs `body` with the optimizer rewrites of [[GraftExtensions]]
     * excluded, so the composed built-in forms they replace evaluate as
     * written — the independent reference of a kernel differential
-    * test. Plans are optimized when an action runs, so build and
-    * collect inside. The session is shared: the previous setting is
-    * restored afterwards.
+    * test.
     */
-  def withoutRewrites[T](body: => T): T = {
-    val key = SQLConf.OPTIMIZER_EXCLUDED_RULES.key
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, Seq(plans.Md5PrefixRewrite, plans.VecSqDistRewrite,
-      plans.VecDotRewrite, plans.ArrayIntersectSizeRewrite)
-      .map(_.ruleName).mkString(","))
-    try body
-    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
+  def withoutRewrites[T](body: => T): T =
+    withConf(SQLConf.OPTIMIZER_EXCLUDED_RULES.key ->
+      Seq(plans.Md5PrefixRewrite, plans.VecSqDistRewrite,
+        plans.VecDotRewrite, plans.ArrayIntersectSizeRewrite)
+        .map(_.ruleName).mkString(","))(body)
+
+  /** Runs `body` with every expression evaluated by its interpreted
+    * `eval`: no whole-stage codegen and no generated projections.
+    */
+  def interpreted[T](body: => T): T =
+    withConf("spark.sql.codegen.wholeStage" -> "false",
+      SQLConf.CODEGEN_FACTORY_MODE.key -> "NO_CODEGEN")(body)
 
   /** Whether the optimized plan of `df` still evaluates an expression
     * satisfying `p` — the guard that a reference escaped the rewrites
