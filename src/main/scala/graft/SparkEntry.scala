@@ -17,24 +17,6 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.pricingSummary(spark, "/root/testdata/sf0.001")
 
-  /** The driver's compare loads results into pandas and sorts by every
-    * column; array/map/struct cells are unhashable there and abort the
-    * check. Serialize complex columns to their canonical JSON form so
-    * rows stay fully content-addressed but scalar. Binary becomes hex.
-    */
-  private def driverSafe(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{col, hex, lower, to_json}
-    import org.apache.spark.sql.types.{ArrayType, BinaryType, MapType, StructType}
-    df.select(df.schema.fields.map { f =>
-      f.dataType match {
-        case _: ArrayType | _: MapType | _: StructType =>
-          to_json(col(f.name)).as(f.name)
-        case BinaryType => lower(hex(col(f.name))).as(f.name)
-        case _ => col(f.name)
-      }
-    }.toIndexedSeq: _*)
-  }
-
   /** q107 lake dirs already scheduled for JVM-exit deletion (one
     * shutdown hook per path, not per invocation).
     */

@@ -31,7 +31,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - keys keep document order and duplicates.
   *
   * The parser factory has the features of Spark's JSON expressions
-  * (unescaped control characters, single quotes).
+  * (unescaped control characters, single quotes). [[JsonKeyProbe.probe]]
+  * is the walk itself; the `jira` source runs it on each issue object
+  * of a response while splitting the response into issue texts.
   */
 case class JsonKeyProbe(child: Expression) extends UnaryExpression {
 
@@ -117,30 +119,42 @@ object JsonKeyProbe {
   def compute(json: UTF8String): InternalRow = {
     val p = parser(json)
     try {
-      if (p.nextToken() != JsonToken.START_OBJECT)
-        return new GenericInternalRow(2)
-      val top = new java.util.ArrayList[AnyRef]()
-      var fieldsKeys: GenericArrayData = null
-      var matched = false
-      while (p.nextToken() == JsonToken.FIELD_NAME) {
-        val name = p.currentName
-        top.add(UTF8String.fromString(name))
-        val t = p.nextToken()
-        if (!matched && t != JsonToken.VALUE_NULL && name == Field) {
-          matched = true
-          t match {
-            case JsonToken.START_OBJECT => fieldsKeys = keys(p)
-            case JsonToken.VALUE_STRING =>
-              fieldsKeys = objectKeys(UTF8String.fromString(p.getText))
-            case _ => p.skipChildren()
-          }
-        } else p.skipChildren()
-      }
-      new GenericInternalRow(Array[Any](fieldsKeys, new GenericArrayData(top.toArray)))
+      if (p.nextToken() != JsonToken.START_OBJECT) new GenericInternalRow(2)
+      else probe(p)
     } catch {
       case _: JsonProcessingException | _: IOException =>
         new GenericInternalRow(2)
     } finally p.close()
+  }
+
+  /** A parser over a Java string with this probe's features; its
+    * token locations are character offsets into `json`.
+    */
+  def parser(json: String): JsonParser = factory.createParser(json)
+
+  /** The probe row of the object the parser's current START_OBJECT
+    * opens; leaves the parser on its END_OBJECT. Throws what the
+    * parser throws on malformed input.
+    */
+  def probe(p: JsonParser): InternalRow = {
+    val top = new java.util.ArrayList[AnyRef]()
+    var fieldsKeys: GenericArrayData = null
+    var matched = false
+    while (p.nextToken() == JsonToken.FIELD_NAME) {
+      val name = p.currentName
+      top.add(UTF8String.fromString(name))
+      val t = p.nextToken()
+      if (!matched && t != JsonToken.VALUE_NULL && name == Field) {
+        matched = true
+        t match {
+          case JsonToken.START_OBJECT => fieldsKeys = keys(p)
+          case JsonToken.VALUE_STRING =>
+            fieldsKeys = objectKeys(UTF8String.fromString(p.getText))
+          case _ => p.skipChildren()
+        }
+      } else p.skipChildren()
+    }
+    new GenericInternalRow(Array[Any](fieldsKeys, new GenericArrayData(top.toArray)))
   }
 
   def keyProbe(c: Column): Column =

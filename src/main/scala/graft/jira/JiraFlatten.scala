@@ -33,15 +33,17 @@ import org.apache.spark.sql.functions._
   *    swallows the AttributeError/TypeError the null raises —
   *    scraper.py:217,316-318), while an ABSENT key is kept and
   *    defaulted (`fields.get("status", {})` → `{}` → "Unknown").
-  *    Spark's JSON parser maps both cases to null, so [[JiraPipeline
-  *    .readRaw]] rides the key sets of the issue and of its `fields`
-  *    object along the scan ([[ProbeFieldsKeys]]/[[ProbeTopKeys]],
-  *    one `JsonKeyProbe` pass per line; the jira source fills the
-  *    same columns from its own parse); when the probe columns are
-  *    present, only explicit nulls drop. Raw frames
-  *    without probes (schema-only readers) fall back to dropping all
-  *    three null core objects — the pre-probe behavior. The "Unknown"
-  *    default still applies to an empty object `{}` or a null `name`
+  *    Spark's JSON parser maps both cases to null, so both readers
+  *    ride the key sets of the issue and of its `fields` object along
+  *    the scan ([[ProbeFieldsKeys]]/[[ProbeTopKeys]], one
+  *    `JsonKeyProbe` pass per issue text): [[JiraPipeline.readRaw]]
+  *    per line, the jira source per issue of a page. One rule drops:
+  *    a crash field (or `fields` itself) that is present in the JSON
+  *    and null after parsing. Both readers emit one row per JSON
+  *    object and always carry the probes; a line or page element
+  *    that is not an object never reaches flatten (see
+  *    [[JiraPipeline.quarantined]]). The "Unknown" default still
+  *    applies to an empty object `{}` or a null `name`
   *    inside a present object; explicit-null `labels` passes through
   *    as null (the reference emits `"labels": null` — no method call
   *    touches it, so no crash).
@@ -57,10 +59,9 @@ object JiraFlatten {
   val MaxDescriptionLength = 20000
   val MaxCommentLength = 10000
 
-  /** Probe columns [[JiraPipeline.readRaw]] attaches: the key sets of
-    * the issue object and its `fields` object, read from the raw line
-    * so absent-key and explicit-null are distinguishable after
-    * parsing.
+  /** Probe columns both readers attach: the key sets of the issue
+    * object and its `fields` object, read from the raw text so
+    * absent-key and explicit-null are distinguishable after parsing.
     */
   val ProbeFieldsKeys = "_fields_keys"
   val ProbeTopKeys = "_top_keys"
@@ -79,7 +80,6 @@ object JiraFlatten {
 
   def flatten(raw: DataFrame, project: String): DataFrame = {
     val f = col("fields")
-    val hasProbes = raw.columns.contains(ProbeFieldsKeys)
     // present-in-JSON AND parsed-to-null ⇒ the value was an explicit
     // JSON null (a type-mismatched scalar also parses to null and also
     // crashes the reference — same verdict either way)
@@ -87,21 +87,11 @@ object JiraFlatten {
       coalesce(array_contains(col(ProbeFieldsKeys), field), lit(false)) &&
         f.getField(field).isNull
     val dropRow =
-      if (hasProbes)
-        CrashNullFields.map(explicitNull).reduce(_ || _) ||
-          (coalesce(array_contains(col(ProbeTopKeys), "fields"),
-            lit(false)) && f.isNull)
-      else
-        f.getField("status").isNull || f.getField("priority").isNull ||
-          f.getField("issuetype").isNull
-    val labelsCol = {
-      val defaulted =
-        coalesce(f.getField("labels"), array().cast("array<string>"))
-      if (hasProbes)
-        when(explicitNull("labels"), lit(null).cast("array<string>"))
-          .otherwise(defaulted)
-      else defaulted
-    }
+      CrashNullFields.map(explicitNull).reduce(_ || _) ||
+        (array_contains(col(ProbeTopKeys), "fields") && f.isNull)
+    val labelsCol =
+      when(explicitNull("labels"), lit(null).cast("array<string>"))
+        .otherwise(coalesce(f.getField("labels"), array().cast("array<string>")))
     val cleanedComments = CleanComments.cleanComments(
       f.getField("comment").getField("comments"), MaxCommentLength)
     raw

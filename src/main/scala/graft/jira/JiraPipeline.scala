@@ -17,55 +17,48 @@ object JiraPipeline {
 
   val FixtureDir = "/root/repo/src/test/resources/jira"
 
-  /** Schema'd parse of the raw issue lines, plus two presence probes
-    * read from the raw text ([[JiraFlatten.ProbeFieldsKeys]]/
-    * [[JiraFlatten.ProbeTopKeys]]): Spark's JSON parser maps an
-    * absent key and an explicit JSON null both to null, but the
-    * reference treats them oppositely (absent → default, null →
-    * crash-drop; scraper.py:217,316-318), so the key sets ride along
-    * the same scan — one text read, no second pass over the file, no
-    * shuffle. Both key sets come from one [[JsonKeyProbe]] pass over
-    * the line that skips every value but the `fields` object's keys.
+  /** One row per raw line that is a JSON object: the `from_json`
+    * parse of the line, plus two presence probes read from the raw
+    * text ([[JiraFlatten.ProbeFieldsKeys]]/[[JiraFlatten.ProbeTopKeys]]).
+    * Spark's JSON parser maps an absent key and an explicit JSON null
+    * both to null, but the reference treats them oppositely (absent →
+    * default, null → crash-drop; scraper.py:217,316-318), so the key
+    * sets ride along the same scan — one text read, no second pass
+    * over the file, no shuffle. Both key sets come from one
+    * [[JsonKeyProbe]] pass over the line that skips every value but
+    * the `fields` object's keys. A line the probe finds no object in
+    * (blank, malformed, a JSON scalar or array) yields no row; see
+    * [[quarantined]]. The `jira` source decodes each issue of a page
+    * the same way.
     */
   def readRaw(spark: SparkSession, path: String): DataFrame =
     spark.read
       .text(path)
-      .select(
-        from_json(col("value"), JiraSchemas.rawIssueSchema).as("j"),
-        JsonKeyProbe.keyProbe(col("value")).as("p")
-      )
+      .select(col("value"), JsonKeyProbe.keyProbe(col("value")).as("p"))
+      // one row per line the probe finds an object in, as a generator
+      // over the probe column (a Filter would be pushed below the
+      // projection and evaluate the probe a second time); only those
+      // lines are parsed
+      .select(col("value"), explode(when(
+        col("p").getField(JsonKeyProbe.TopKeys).isNotNull, array(col("p"))))
+        .as("p"))
+      .select(from_json(col("value"), JiraSchemas.rawIssueSchema).as("j"),
+        col("p"))
       .select(col("j.*"),
         col("p").getField(JsonKeyProbe.FieldsKeys).as(JiraFlatten.ProbeFieldsKeys),
         col("p").getField(JsonKeyProbe.TopKeys).as(JiraFlatten.ProbeTopKeys))
 
-  /** Ingest robustness for corpus-scale JSON: PERMISSIVE parse with a
-    * quarantine column — a malformed line becomes one quarantine row
-    * instead of failing a 100 TB job (at scale a bad-records rate is
-    * an SLO, not an exception). Returns (parsed, quarantined,
-    * release): the backing frame is cached because Spark forbids
-    * filtering the internal corrupt-record column on the
-    * un-materialized scan (SPARK-21610 semantics) — call `release()`
-    * after materializing both splits so the cache doesn't pin
-    * executor memory for the session lifetime.
+  /** The lines [[readRaw]] skips, verbatim in one `value` column: every
+    * non-blank line that is not a JSON object (malformed, a scalar or
+    * an array). At corpus scale a bad-records rate is an SLO, not an
+    * exception: these are kept for replay and debugging, never fail
+    * the read. Lazy like any scan; nothing is cached.
     */
-  def readRawWithQuarantine(
-      spark: SparkSession,
-      path: String
-  ): (DataFrame, DataFrame, () => Unit) = {
-    val corruptCol = "_corrupt_record"
-    val raw = spark.read
-      .schema(JiraSchemas.rawIssueSchema
-        .add(corruptCol, org.apache.spark.sql.types.StringType))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", corruptCol)
-      .json(path)
-      .cache()
-    (
-      raw.filter(col(corruptCol).isNull).drop(corruptCol),
-      raw.filter(col(corruptCol).isNotNull).select(col(corruptCol)),
-      () => { raw.unpersist(); () }
-    )
-  }
+  def quarantined(spark: SparkSession, path: String): DataFrame =
+    spark.read
+      .text(path)
+      .filter(trim(col("value"), " \t") =!= "" &&
+        JsonKeyProbe.keyProbe(col("value")).getField(JsonKeyProbe.TopKeys).isNull)
 
   /** Flattened issues for a list of (project, rawJsonPath), tagged
     * with project_rank to preserve config order.

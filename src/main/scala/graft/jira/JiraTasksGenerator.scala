@@ -1,19 +1,17 @@
 package graft.jira
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.StructType
 
 /** SQL-exposed fan-out (SURVEY §2.5 option c): a custom Catalyst
   * `Generator` wrapping the typed transform, so SQL users get the
-  * reference's 1-issue → 0..7-examples semantics via LATERAL VIEW:
+  * reference's 1-issue → 0..7-examples semantics via LATERAL VIEW
+  * (`GraftExtensions` injects `jira_tasks` into every session):
   *
   * {{{
-  *   JiraTasksGenerator.register(spark)
   *   spark.sql("""
   *     SELECT t.task_type, t.output
   *     FROM issues
@@ -74,20 +72,4 @@ case class JiraTasksGenerator(child: Expression)
     copy(child = c)
 
   override def prettyName: String = "jira_tasks"
-}
-
-object JiraTasksGenerator {
-
-  /** Register as a SQL function usable with LATERAL VIEW / generator
-    * positions.
-    */
-  def register(spark: SparkSession): Unit =
-    ColumnBridge.registerFunction(
-      spark,
-      "jira_tasks",
-      exprs => {
-        require(exprs.length == 1, "jira_tasks(issueStruct)")
-        JiraTasksGenerator(exprs.head)
-      }
-    )
 }

@@ -29,6 +29,13 @@ import scala.collection.JavaConverters._
   *    cursor — the reference's checkpoint file (issues_processed,
   *    scraper.py:81-87) maps to Spark's offset log under
   *    checkpointLocation.
+  *  - One decode per issue, shared with the file path: each page (or
+  *    point-lookup body) is split into issue object texts with their
+  *    presence probes ([[JiraResponse]]), and each text is parsed by
+  *    `from_json` exactly as [[graft.jira.JiraPipeline.readRaw]] parses
+  *    a line. A non-object element or an issue that fails to parse
+  *    drops that issue alone, and a syntax error ends its page; none
+  *    of these fails the scan or the stream.
   *
   * Usage (stub-backed, zero-egress):
   * {{{
@@ -78,11 +85,11 @@ object JiraSourceOptions {
     * maxResults=0 request — scraper.py:275-276).
     */
   def probeTotal(t: JiraTransport, sleepScale: Double): Int = {
-    val probeSchema = StructType(Seq(StructField("total", IntegerType)))
     val body = JiraRetry.withRetry(sleepScale = sleepScale)(
       t.fetch(0, 1, Nil)
     )
-    JsonBridge.parseJson(probeSchema, body).head.getInt(0)
+    JiraResponse.total(body).getOrElse(throw new IllegalStateException(
+      "jira source: the total probe response has no integer total"))
   }
 }
 
@@ -299,102 +306,126 @@ class JiraReaderFactory(required: StructType, options: Map[String, String])
   }
 }
 
-/** Absent-vs-null presence probes for the connector path: the key
-  * sets of each issue object and its `fields` object, read with a
-  * plain Jackson tree walk of the same response body the row parser
-  * consumed (array order is preserved on both sides, so zip aligns).
-  * For well-formed issues without duplicate keys these are the key
-  * sets the `JsonKeyProbe` columns of [[graft.jira.JiraPipeline.readRaw]]
-  * compute. The tree walk differs where the probe keeps the quirks of
-  * `json_object_keys`: it lists a duplicated key once, takes the last
-  * `fields` member rather than the first non-null one, and gives null
-  * for a `fields` string that holds JSON object text.
+/** The one split of a response body into issues: a streaming Jackson
+  * pass that yields each issue object's own JSON text (its character
+  * span in the body) with its [[graft.functions.JsonKeyProbe]] row,
+  * computed by the same walk. Non-object elements are skipped. A
+  * syntax error ends the walk and keeps the objects completed before
+  * it, so a malformed body yields nothing and never fails the read.
+  * Each text then goes through the `from_json` parse that
+  * [[graft.jira.JiraPipeline.readRaw]] runs on a line, so both front
+  * ends decode an issue the same way. The page's `total` is read by
+  * the same kind of walk, so a bad issue in the probed page cannot
+  * fail planning either.
   */
-object JiraJsonProbe {
-  import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+object JiraResponse {
+  import com.fasterxml.jackson.core.{JsonParser, JsonProcessingException, JsonToken}
+  import graft.functions.JsonKeyProbe
+  import scala.collection.mutable.ArrayBuffer
 
-  private val mapper = new ObjectMapper()
-
-  /** (fieldsKeys, topKeys) — null array ≡ the object is absent/null/
-    * non-object, matching json_object_keys semantics.
-    */
-  def issueProbe(node: JsonNode): (Array[String], Array[String]) = {
-    val top =
-      if (node != null && node.isObject) node.fieldNames().asScala.toArray
-      else null
-    val f = if (node != null) node.get("fields") else null
-    val fk =
-      if (f != null && f.isObject) f.fieldNames().asScala.toArray
-      else null
-    (fk, top)
+  /** The object elements of a /search body's `issues` array, in order. */
+  def issues(body: String): Seq[(String, InternalRow)] = {
+    val out = ArrayBuffer.empty[(String, InternalRow)]
+    topLevel(body) { (p, name, t) =>
+      if (name != "issues" || t != JsonToken.START_ARRAY) false
+      else {
+        while (p.nextToken() != JsonToken.END_ARRAY)
+          if (p.currentToken == JsonToken.START_OBJECT) out += objectText(p, body)
+          else p.skipChildren()
+        true
+      }
+    }
+    out.toSeq
   }
 
-  /** Per-issue probes of a /search response, in `issues[]` order.
-    * A malformed body degrades to no probes (the row parser handles
-    * malformed input on its own terms — the probe pass must never be
-    * the thing that fails the read).
-    */
-  def searchProbes(body: String): Vector[(Array[String], Array[String])] =
-    try {
-      val issues = mapper.readTree(body).get("issues")
-      if (issues == null || !issues.isArray) Vector.empty
-      else issues.elements().asScala.map(issueProbe).toVector
-    } catch { case _: Exception => Vector.empty }
+  /** A GET /issue/{key} body, when it is an object. */
+  def issue(body: String): Option[(String, InternalRow)] =
+    guarded(body) { p =>
+      if (p.nextToken() == JsonToken.START_OBJECT) Some(objectText(p, body)) else None
+    }.flatten
 
-  def singleProbe(body: String): (Array[String], Array[String]) =
-    try issueProbe(mapper.readTree(body))
-    catch { case _: Exception => (null, null) }
+  /** The integer `total` of a /search body. */
+  def total(body: String): Option[Int] = {
+    var n: Option[Int] = None
+    topLevel(body) { (p, name, t) =>
+      if (name != "total" || t != JsonToken.VALUE_NUMBER_INT) false
+      else { n = Some(p.getIntValue); true }
+    }
+    n
+  }
+
+  /** Runs `f` over a parser on `body`; malformed input ends it early. */
+  private def guarded[T](body: String)(f: JsonParser => T): Option[T] = {
+    val p = JsonKeyProbe.parser(body)
+    try Some(f(p))
+    catch { case _: JsonProcessingException | _: java.io.IOException => None }
+    finally p.close()
+  }
+
+  /** Offers each top-level member (name, first value token) of an
+    * object body to `member` until it returns true (consumed, done);
+    * a member it declines is skipped.
+    */
+  private def topLevel(body: String)(
+      member: (JsonParser, String, JsonToken) => Boolean): Unit =
+    guarded(body) { p =>
+      var done = p.nextToken() != JsonToken.START_OBJECT
+      while (!done && p.nextToken() == JsonToken.FIELD_NAME) {
+        val name = p.currentName
+        done = member(p, name, p.nextToken())
+        if (!done) p.skipChildren()
+      }
+    }
+
+  private def objectText(p: JsonParser, body: String): (String, InternalRow) = {
+    val start = p.currentTokenLocation().getCharOffset.toInt
+    val probe = JsonKeyProbe.probe(p)
+    (body.substring(start, p.currentTokenLocation().getCharOffset.toInt + 1), probe)
+  }
 }
 
-/** Shared reader plumbing: splits the pruned schema into parseable
-  * columns vs probe columns, and reassembles output rows in the
-  * pruned order (probes computed, everything else passed through).
+/** Reader plumbing shared by the page and point-lookup readers: splits
+  * the pruned schema into parsed columns and probe columns, decodes
+  * each issue text with one `from_json` parser built per partition,
+  * and assembles rows in the pruned order.
   */
-trait JiraProbeAssembly {
+abstract class JiraIssueReader(required: StructType)
+    extends PartitionReader[InternalRow] {
   import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-  import org.apache.spark.sql.catalyst.util.GenericArrayData
   import org.apache.spark.unsafe.types.UTF8String
 
-  def required: StructType
+  /** (object text, probe row) of each issue this partition reads. */
+  protected def issueTexts: Iterator[(String, InternalRow)]
 
   private val probeNames =
     Set(graft.jira.JiraFlatten.ProbeFieldsKeys,
       graft.jira.JiraFlatten.ProbeTopKeys)
 
   /** Columns the JSON row parser materializes (probes excluded). */
-  final val parseSchema: StructType =
+  private val parseSchema: StructType =
     StructType(required.fields.filterNot(f => probeNames(f.name)))
-
-  final val wantsProbes: Boolean =
-    required.fields.exists(f => probeNames(f.name))
 
   /** The server-side projection: pruned fields.* subfield names — the
     * REST `fields=` param (pushdown of column pruning to the source).
     */
-  final val restFields: Seq[String] =
+  protected final val restFields: Seq[String] =
     parseSchema.fields
       .find(_.name == "fields")
       .map(_.dataType.asInstanceOf[StructType].fieldNames.toSeq)
       .getOrElse(Nil)
 
-  private def keysArray(keys: Array[String]): AnyRef =
-    if (keys == null) null
-    else new GenericArrayData(keys.map(UTF8String.fromString(_): AnyRef))
+  private lazy val decode = JsonBridge.fromJson(parseSchema)
 
-  final def assemble(
-      row: InternalRow,
-      probe: (Array[String], Array[String])
-  ): InternalRow = {
+  private def assemble(text: String, probe: InternalRow): InternalRow = {
+    val row = decode(UTF8String.fromString(text))
     var pi = 0
     val vals = new Array[Any](required.length)
     var i = 0
     while (i < required.length) {
       val f = required.fields(i)
       vals(i) =
-        if (f.name == graft.jira.JiraFlatten.ProbeFieldsKeys)
-          keysArray(probe._1)
-        else if (f.name == graft.jira.JiraFlatten.ProbeTopKeys)
-          keysArray(probe._2)
+        if (f.name == graft.jira.JiraFlatten.ProbeFieldsKeys) probe.getArray(0)
+        else if (f.name == graft.jira.JiraFlatten.ProbeTopKeys) probe.getArray(1)
         else {
           val v = row.get(pi, parseSchema.fields(pi).dataType)
           pi += 1
@@ -404,42 +435,9 @@ trait JiraProbeAssembly {
     }
     new GenericInternalRow(vals)
   }
-}
 
-class JiraPartitionReader(
-    partition: JiraInputPartition,
-    val required: StructType,
-    transport: JiraTransport,
-    sleepScale: Double
-) extends PartitionReader[InternalRow]
-    with JiraProbeAssembly {
-
-  private lazy val rows: Iterator[InternalRow] = {
-    val body = JiraRetry.withRetry(sleepScale = sleepScale)(
-      transport.fetch(partition.startAt, partition.pageSize, restFields)
-    )
-    val responseSchema = StructType(
-      Seq(StructField("issues", ArrayType(parseSchema)))
-    )
-    // probes are keyed by the issue's index in issues[] — carried
-    // through the schema'd parse below, NOT positionally zipped
-    // across two parsers, so a row the schema'd parser nulls still
-    // meets ITS OWN probe; out-of-range / failed-parse indexes get
-    // the no-probe default
-    lazy val probes = JiraJsonProbe.searchProbes(body)
-    def probeAt(i: Int): (Array[String], Array[String]) =
-      if (i < probes.length) probes(i) else (null, null)
-    JsonBridge.parseJson(responseSchema, body).iterator.flatMap { row =>
-      if (row.isNullAt(0)) Iterator.empty
-      else {
-        val arr = row.getArray(0)
-        (0 until arr.numElements()).iterator.map { i =>
-          val r = arr.getStruct(i, parseSchema.length).copy()
-          if (wantsProbes) assemble(r, probeAt(i)) else r
-        }
-      }
-    }
-  }
+  private lazy val rows: Iterator[InternalRow] =
+    issueTexts.map { case (text, probe) => assemble(text, probe) }
 
   private var current: InternalRow = _
 
@@ -450,6 +448,20 @@ class JiraPartitionReader(
   override def get(): InternalRow = current
 
   override def close(): Unit = ()
+}
+
+/** Page reader: one /search request per partition. */
+class JiraPartitionReader(
+    partition: JiraInputPartition,
+    required: StructType,
+    transport: JiraTransport,
+    sleepScale: Double
+) extends JiraIssueReader(required) {
+
+  override protected def issueTexts: Iterator[(String, InternalRow)] =
+    JiraResponse.issues(JiraRetry.withRetry(sleepScale = sleepScale)(
+      transport.fetch(partition.startAt, partition.pageSize, restFields)
+    )).iterator
 }
 
 /** Point-lookup reader: pushed `key` equalities become single-issue
@@ -458,36 +470,18 @@ class JiraPartitionReader(
   */
 class JiraLookupReader(
     partition: JiraLookupPartition,
-    val required: StructType,
+    required: StructType,
     transport: JiraTransport,
     sleepScale: Double
-) extends PartitionReader[InternalRow]
-    with JiraProbeAssembly {
+) extends JiraIssueReader(required) {
 
-  private lazy val rows: Iterator[InternalRow] =
+  override protected def issueTexts: Iterator[(String, InternalRow)] =
     partition.keys.iterator.flatMap { key =>
       JiraRetry
         .withRetry(sleepScale = sleepScale)(
           transport.fetchIssue(key, restFields)
         )
         .iterator
-        .flatMap { body =>
-          val parsed = JsonBridge.parseJson(parseSchema, body)
-          if (!wantsProbes) parsed
-          else {
-            val probe = JiraJsonProbe.singleProbe(body)
-            parsed.map(assemble(_, probe))
-          }
-        }
+        .flatMap(JiraResponse.issue)
     }
-
-  private var current: InternalRow = _
-
-  override def next(): Boolean =
-    if (rows.hasNext) { current = rows.next(); true }
-    else false
-
-  override def get(): InternalRow = current
-
-  override def close(): Unit = ()
 }

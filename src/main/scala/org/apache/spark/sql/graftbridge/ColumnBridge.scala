@@ -13,18 +13,4 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Register a Catalyst expression builder as a SQL function on the
-    * session (sessionState is private[sql]).
-    */
-  def registerFunction(
-      spark: org.apache.spark.sql.SparkSession,
-      name: String,
-      builder: Seq[Expression] => Expression
-  ): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      builder,
-      "scala_udf"
-    )
 }

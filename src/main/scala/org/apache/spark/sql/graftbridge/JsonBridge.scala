@@ -1,28 +1,32 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JSONOptions, JacksonParser}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JsonToStructs}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Bridge to Spark's internal Jackson JSON→InternalRow parser, used by
-  * the Jira DSv2 source to decode REST response bodies inside a
-  * PartitionReader (the same machinery Spark's own JSON file source
-  * uses). Lives under org.apache.spark.sql.* for package-private
-  * access.
+/** Bridge to the expression behind `from_json`, so the Jira DSv2
+  * source decodes an issue's JSON text with the very parse
+  * [[graft.jira.JiraPipeline.readRaw]] runs on a JSONL line. Lives
+  * under org.apache.spark.sql.* for package-private access.
   */
 object JsonBridge {
 
-  /** Parse one JSON document into InternalRows for `schema`. */
-  def parseJson(schema: StructType, json: String): Seq[InternalRow] = {
-    val parser = new JacksonParser(
-      schema,
-      new JSONOptions(Map.empty[String, String], "UTC"),
-      allowArrayAsStructs = true,
-      Nil
-    )
-    parser
-      .parse[String](json, CreateJacksonParser.string, UTF8String.fromString)
-      .toSeq
+  /** `from_json(text, schema)` as a function, built once per
+    * partition reader: PERMISSIVE (malformed input gives a row of
+    * nulls, never an exception), with the session time zone the
+    * analyzer gives `from_json`. Call it where the task's SQL conf is
+    * set.
+    */
+  def fromJson(schema: StructType): UTF8String => InternalRow = {
+    val expr = JsonToStructs(schema, Map.empty[String, String],
+      BoundReference(0, StringType, nullable = true),
+      Some(SQLConf.get.sessionLocalTimeZone))
+    val input = new GenericInternalRow(1)
+    json => {
+      input.update(0, json)
+      expr.eval(input).asInstanceOf[InternalRow]
+    }
   }
 }

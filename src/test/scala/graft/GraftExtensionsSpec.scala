@@ -179,24 +179,27 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkSpec {
         "jira_tasks")))
   }
 
-  test("sessions are built only by Sessions and never stopped in specs") {
-    import java.nio.file.{Files, Path, Paths}
+  private def sources(root: String): Seq[java.nio.file.Path] = {
     import scala.jdk.CollectionConverters._
-    def sources(root: String): Seq[Path] = {
-      val s = Files.walk(Paths.get(root))
-      try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
-      finally s.close()
+    val s = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+    try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+    finally s.close()
+  }
+
+  /** Code lines matching `pattern` (scaladoc may show the API). */
+  private def hits(files: Seq[java.nio.file.Path], pattern: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    files.flatMap { f =>
+      java.nio.file.Files.readAllLines(f, java.nio.charset.StandardCharsets.ISO_8859_1)
+        .asScala.zipWithIndex.collect {
+          case (l, i) if !l.trim.startsWith("*") &&
+              !l.trim.startsWith("//") && pattern.r.findFirstIn(l).nonEmpty =>
+            s"$f:${i + 1}: ${l.trim}"
+        }
     }
-    // code lines only: scaladoc may show the builder to deployers
-    def hits(files: Seq[Path], pattern: String): Seq[String] =
-      files.flatMap { f =>
-        Files.readAllLines(f, java.nio.charset.StandardCharsets.ISO_8859_1)
-          .asScala.zipWithIndex.collect {
-            case (l, i) if !l.trim.startsWith("*") &&
-                !l.trim.startsWith("//") && pattern.r.findFirstIn(l).nonEmpty =>
-              s"$f:${i + 1}: ${l.trim}"
-          }
-      }
+  }
+
+  test("sessions are built only by Sessions and never stopped in specs") {
     val main = sources("src/main/scala")
     val test = sources("src/test/scala")
     assert(main.nonEmpty && test.nonEmpty)
@@ -207,5 +210,14 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkSpec {
     val stops = hits(test,
       """\.stop\(\)|clear(Active|Default)Session""")
     assert(stops.isEmpty, stops.mkString("\n"))
+  }
+
+  test("SQL functions are registered only by GraftExtensions") {
+    val all = sources("src/main/scala") ++ sources("src/test/scala")
+    val registrations = hits(
+      all.filterNot(_.getFileName.toString == "GraftExtensions.scala"),
+      // [F] keeps this line from matching itself
+      """createOrReplaceTemp[F]unction|register[F]unction""")
+    assert(registrations.isEmpty, registrations.mkString("\n"))
   }
 }

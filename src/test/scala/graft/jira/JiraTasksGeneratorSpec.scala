@@ -11,7 +11,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class JiraTasksGeneratorSpec extends AnyFunSuite with SparkSpec {
 
   test("LATERAL VIEW jira_tasks ≡ column-expression generator") {
-    JiraTasksGenerator.register(spark)
     val flat = JiraFlatten.flatten(
       JiraPipeline.readRaw(
         spark,

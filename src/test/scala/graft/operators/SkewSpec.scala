@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.{SparkSpec, Tables}
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -39,7 +38,6 @@ class SkewSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("vec_dot is callable from SQL after registration") {
-    GraftFunctions.register(spark)
     val v = spark
       .sql("SELECT vec_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
         "array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d")

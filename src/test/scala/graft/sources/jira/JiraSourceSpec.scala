@@ -2,8 +2,10 @@ package graft.sources.jira
 
 import graft.SparkSpec
 import graft.jira.{JiraFlatten, JiraPipeline}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StringType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** DSv2 `jira` source spec: batch scan (pagination partitions, column
@@ -24,21 +26,21 @@ class JiraSourceSpec extends AnyFunSuite with SparkSpec {
       .option("retrySleepScale", 0.001)
 
   test("probe pass degrades gracefully and keys by issues[] index") {
-    // malformed body: the probe pass must yield no probes, never throw
-    // (the row parser owns malformed-input behavior)
-    assert(JiraJsonProbe.searchProbes("{not json").isEmpty)
-    assert(JiraJsonProbe.singleProbe("{not json") == (null, null))
-    // probes are per issues[] element, in order — including elements
-    // a schema'd parser might null (non-object entries)
-    val body =
-      """{"issues":[{"key":"A","fields":{"summary":"x"}},42,
-         {"key":"B","fields":{"status":{"name":"Open"}}}]}"""
-    val p = JiraJsonProbe.searchProbes(body)
-    assert(p.length == 3)
-    assert(p(0)._1.toSeq == Seq("summary") &&
-      p(0)._2.toSeq == Seq("key", "fields"))
-    assert(p(1)._1 == null && p(1)._2 == null) // non-object element
-    assert(p(2)._1.toSeq == Seq("status"))
+    // malformed body: the shared split yields no issues, never throws
+    assert(JiraResponse.issues("{not json").isEmpty)
+    assert(JiraResponse.issue("{not json").isEmpty)
+    // one probe per object element, in issues[] order; a non-object
+    // element is skipped, and each text is the element verbatim
+    val a = """{"key":"A","fields":{"summary":"x"}}"""
+    val b = """{"key":"B","fields":{"status":{"name":"Open"}}}"""
+    val p = JiraResponse.issues(s"""{"issues":[$a,42,
+         $b]}""")
+    assert(p.map(_._1) == Seq(a, b))
+    def keys(r: InternalRow, i: Int) =
+      r.getArray(i).toSeq[AnyRef](StringType).map(_.toString)
+    assert(keys(p(0)._2, 0) == Seq("summary") &&
+      keys(p(0)._2, 1) == Seq("key", "fields"))
+    assert(keys(p(1)._2, 0) == Seq("status"))
   }
 
   test("batch read returns all issues across page partitions") {
