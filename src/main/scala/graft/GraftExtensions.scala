@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Session-extensions entry point: registers the engine's custom
   * Catalyst expressions on every session created with
@@ -18,7 +19,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * left-to-right double accumulation the oracles mirror),
   * `rolling_hash` (codegen'd document fingerprint), and `jira_tasks`
   * (the LATERAL VIEW fan-out generator) become available in plain SQL
-  * everywhere.
+  * everywhere. `vec_cosine` and `jira_tasks` are the Column-DSL forms
+  * themselves (`VectorMath.vecCosine`, `JiraGenerators.tasks`), turned
+  * into Catalyst trees by `ColumnBridge.expression`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -66,20 +69,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         info("vec_cosine", "vec_cosine(a, b) - cosine similarity of float arrays"),
         (exprs: Seq[Expression]) => {
           require(exprs.length == 2, "vec_cosine(arrayA, arrayB)")
-          // must be a resolved Catalyst tree (bridging the Column-DSL
-          // form of VectorMath.vecCosine leaves UnresolvedFunction
-          // nodes the registry path never resolves); this tree is the
-          // expression-level mirror of vecCosine, kept in sync by the
-          // extensions spec asserting both paths agree
-          import org.apache.spark.sql.catalyst.expressions.{Divide, Multiply, Sqrt}
-          val (a, b) = (exprs(0), exprs(1))
-          Divide(
-            functions.VectorDot(a, b),
-            Multiply(
-              Sqrt(functions.VectorDot(a, a)),
-              Sqrt(functions.VectorDot(b, b))
-            )
-          )
+          ColumnBridge.expression(functions.VectorMath.vecCosine(
+            ColumnBridge.column(exprs(0)), ColumnBridge.column(exprs(1))))
         }
       )
     )
@@ -202,7 +193,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         info("jira_tasks", "jira_tasks(issueStruct) - training-task fan-out"),
         (exprs: Seq[Expression]) => {
           require(exprs.length == 1, "jira_tasks(issueStruct)")
-          jira.JiraTasksGenerator(exprs.head)
+          jira.JiraGenerators.tasks(exprs.head)
         }
       )
     )

@@ -1,185 +1,140 @@
 package graft.jira
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.expressions.{Explode, Expression, Generator}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** The fan-out stage: 1 flattened issue → 0..7 training examples
   * (transformer.py:214-274; SURVEY §2.5 G1-G6).
   *
-  * Primary form: conditionally-built array of example structs +
-  * posexplode — pure Catalyst, codegen-friendly, no shuffle; the
-  * per-issue emission order (summarization, classification,
-  * status_prediction, QA1, QA2, QA3, resolution) is carried as
-  * `task_rank` for deterministic ordered writes (SURVEY §2.10).
+  * One encoding: [[examples]] builds the filtered array of example
+  * structs from a field accessor. [[generate]] reads a DataFrame's
+  * columns with it and posexplodes the array — pure Catalyst, no
+  * shuffle; the per-issue emission order (summarization,
+  * classification, status_prediction, QA1, QA2, QA3, resolution) is
+  * carried as `task_rank` for deterministic ordered writes (SURVEY
+  * §2.10). [[tasks]], the `jira_tasks` SQL generator, reads the fields
+  * of its struct argument by name and explodes the same array.
   *
-  * A typed flatMap twin ([[JiraGeneratorsTyped]]) encodes the same
-  * semantics imperatively for differential testing.
+  * [[JiraGeneratorsTyped]] encodes the same semantics imperatively: the
+  * independent reference the differential tests compare against.
   */
 object JiraGenerators {
 
   private val QaInstruction =
     "Answer the following question about this software issue:"
 
-  /** metadata struct: 9 base fields ∪ question_type (base values win
-    * on collision — transformer.py:243-268; the per-task extras that
-    * survive are only question_type).
+  /** The examples of the issue whose field `name` is `f(name)`, non-null
+    * and in emission order.
     */
-  private def metadata(questionType: Column): Column =
-    struct(
-      col("issue_key").as("issue_key"),
-      col("project").as("project"),
-      col("issue_type").as("issue_type"),
-      col("priority").as("priority"),
-      col("status").as("status"),
-      col("created").as("created"),
-      col("url").as("url"),
-      col("labels").as("labels"),
-      col("components").as("components"),
-      questionType.as("question_type")
-    )
+  def examples(f: String => Column): Column = {
+    // metadata struct: 9 base fields ∪ question_type (base values win
+    // on collision — transformer.py:243-268; the per-task extras that
+    // survive are only question_type)
+    def example(
+        taskType: String,
+        instruction: String,
+        input: Column,
+        output: Column,
+        questionType: Column = lit(null).cast("string")
+    ): Column =
+      struct(
+        lit(taskType).as("task_type"),
+        lit(instruction).as("instruction"),
+        input.as("input"),
+        output.as("output"),
+        struct(
+          Seq("issue_key", "project", "issue_type", "priority", "status",
+            "created", "url", "labels", "components").map(n => f(n).as(n)) :+
+            questionType.as("question_type"): _*
+        ).as("metadata")
+      )
 
-  private def example(
-      taskType: String,
-      instruction: String,
-      input: Column,
-      output: Column,
-      questionType: Column = lit(null).cast("string")
-  ): Column =
-    struct(
-      lit(taskType).as("task_type"),
-      lit(instruction).as("instruction"),
-      input.as("input"),
-      output.as("output"),
-      metadata(questionType).as("metadata")
-    )
+    val desc = f("description")
+    val hasDesc = desc =!= ""
+    val comments = f("comments")
+    val hasComments = size(comments) > 0
+    val descriptionLine =
+      when(hasDesc, concat(lit("Description: "), substring(desc, 1, 500)))
+        .otherwise(lit(""))
+    def qa(output: Column, questionType: String, question: Column*): Column =
+      example(
+        "question_answering",
+        QaInstruction,
+        concat(Seq(lit("Issue Key: "), f("issue_key"), lit("\nTitle: "),
+          f("title")) ++ question: _*),
+        output,
+        lit(questionType)
+      )
 
-  private val desc = col("description")
-  private val hasDesc = desc =!= ""
-  private val hasComments = size(col("comments")) > 0
-
-  /** G1 — summarization (transformer.py:32-64): description ⊕ first 3
-    * comments joined by blank lines; output templates title/status/
-    * priority.
-    */
-  private def summarization: Column = {
-    val parts = filter(
-      array(
-        when(hasDesc, concat(lit("Description: "), desc)),
-        when(size(col("comments")) >= 1,
-          concat(lit("Comment 1: "), col("comments")(0).getField("body"))),
-        when(size(col("comments")) >= 2,
-          concat(lit("Comment 2: "), col("comments")(1).getField("body"))),
-        when(size(col("comments")) >= 3,
-          concat(lit("Comment 3: "), col("comments")(2).getField("body")))
-      ),
-      p => p.isNotNull
-    )
-    when(
+    // G1 — summarization (transformer.py:32-64): description ⊕ first 3
+    // comments joined by blank lines; output templates title/status/
+    // priority
+    val parts = when(hasDesc, concat(lit("Description: "), desc)) +:
+      (1 to 3).map(i => when(size(comments) >= i,
+        concat(lit(s"Comment $i: "), comments(i - 1).getField("body"))))
+    val summarization = when(
       hasDesc || hasComments,
       example(
         "summarization",
         "Summarize the following software issue and its discussion:",
-        array_join(parts, "\n\n"),
-        concat(col("title"), lit(" (Status: "), col("status"),
-          lit(", Priority: "), col("priority"), lit(")"))
+        concat_ws("\n\n", parts: _*), // skips the absent (NULL) parts
+        concat(f("title"), lit(" (Status: "), f("status"),
+          lit(", Priority: "), f("priority"), lit(")"))
       )
     )
-  }
 
-  /** G2 — priority classification (transformer.py:66-91): title +
-    * first 500 description chars (raw slice, no ellipsis).
-    */
-  private def classification: Column =
-    when(
-      col("title") =!= "" && col("priority") =!= "",
+    // G2 — priority classification (transformer.py:66-91): title +
+    // first 500 description chars (raw slice, no ellipsis)
+    val classification = when(
+      f("title") =!= "" && f("priority") =!= "",
       example(
         "classification",
         "Classify the priority of this software issue (Blocker, Critical, Major, Minor, Trivial):",
-        concat(
-          lit("Title: "), col("title"), lit("\n"),
-          when(hasDesc, concat(lit("Description: "), substring(desc, 1, 500)))
-            .otherwise(lit(""))
-        ),
-        col("priority")
+        concat(lit("Title: "), f("title"), lit("\n"), descriptionLine),
+        f("priority")
       )
     )
 
-  /** G3 — status prediction (transformer.py:93-120). */
-  private def statusPrediction: Column =
-    when(
-      col("title") =!= "" && col("status") =!= "",
+    // G3 — status prediction (transformer.py:93-120)
+    val statusPrediction = when(
+      f("title") =!= "" && f("status") =!= "",
       example(
         "status_prediction",
         "Predict the current status of this software issue:",
         concat(
-          lit("Issue: "), col("title"), lit("\n"),
-          lit("Type: "), col("issue_type"), lit("\n"),
-          lit("Priority: "), col("priority"), lit("\n"),
-          when(hasDesc, concat(lit("Description: "), substring(desc, 1, 500)))
-            .otherwise(lit(""))
+          lit("Issue: "), f("title"), lit("\n"),
+          lit("Type: "), f("issue_type"), lit("\n"),
+          lit("Priority: "), f("priority"), lit("\n"),
+          descriptionLine
         ),
-        col("status")
+        f("status")
       )
     )
 
-  /** G4 — QA fan-out (transformer.py:122-177): Q1 always, Q2 always,
-    * Q3 only when the assignee is known.
-    */
-  private def qa1: Column =
-    example(
-      "question_answering",
-      QaInstruction,
-      concat(
-        lit("Issue Key: "), col("issue_key"),
-        lit("\nTitle: "), col("title"),
-        lit("\nDescription: "), desc,
-        lit("\n\nQuestion: What is this issue about?")
-      ),
-      col("title"),
-      lit("summary")
+    // G4 — QA fan-out (transformer.py:122-177): Q1 always, Q2 always,
+    // Q3 only when the assignee is known
+    val qa1 = qa(f("title"), "summary", lit("\nDescription: "), desc,
+      lit("\n\nQuestion: What is this issue about?"))
+    val qa2 = qa(f("status"), "status",
+      lit("\n\nQuestion: What is the current status of this issue?"))
+    val qa3 = when(
+      f("assignee") =!= "" && f("assignee") =!= "Unknown",
+      qa(f("assignee"), "assignee",
+        lit("\n\nQuestion: Who is assigned to this issue?"))
     )
 
-  private def qa2: Column =
-    example(
-      "question_answering",
-      QaInstruction,
-      concat(
-        lit("Issue Key: "), col("issue_key"),
-        lit("\nTitle: "), col("title"),
-        lit("\n\nQuestion: What is the current status of this issue?")
-      ),
-      col("status"),
-      lit("status")
-    )
-
-  private def qa3: Column =
-    when(
-      col("assignee") =!= "" && col("assignee") =!= "Unknown",
-      example(
-        "question_answering",
-        QaInstruction,
-        concat(
-          lit("Issue Key: "), col("issue_key"),
-          lit("\nTitle: "), col("title"),
-          lit("\n\nQuestion: Who is assigned to this issue?")
-        ),
-        col("assignee"),
-        lit("assignee")
-      )
-    )
-
-  /** G5 — issue resolution (transformer.py:179-212): last 2 comment
-    * bodies joined "\n", first 500 chars, only for Resolved/Closed
-    * issues with comments.
-    */
-  private def resolution: Column =
-    when(
-      hasComments && col("status").isin("Resolved", "Closed"),
+    // G5 — issue resolution (transformer.py:179-212): last 2 comment
+    // bodies joined "\n", first 500 chars, only for Resolved/Closed
+    // issues with comments
+    val resolution = when(
+      hasComments && f("status").isin("Resolved", "Closed"),
       example(
         "issue_resolution",
         "Based on the issue discussion, explain how this issue was resolved:",
         concat(
-          lit("Issue: "), col("title"), lit("\n"),
+          lit("Issue: "), f("title"), lit("\n"),
           when(hasDesc,
             concat(lit("Description: "), substring(desc, 1, 500), lit("\n")))
             .otherwise(lit("")),
@@ -187,12 +142,11 @@ object JiraGenerators {
         ),
         substring(
           array_join(
-            transform(
-              // last min(2, size) comments: slice(c, -2, 2) is empty
-              // for a one-element array, Python's comments[-2:] is not
-              slice(col("comments"),
-                greatest(-size(col("comments")), lit(-2)), lit(2)),
-              c => c.getField("body")),
+            // last min(2, size) bodies: slice(c, -2, 2) is empty for a
+            // one-element array, Python's comments[-2:] is not; the
+            // size > 0 guard above keeps slice's start non-zero
+            slice(comments.getField("body"),
+              greatest(-size(comments), lit(-2)), lit(2)),
             "\n"
           ),
           1,
@@ -200,6 +154,13 @@ object JiraGenerators {
         )
       )
     )
+
+    filter(
+      array(summarization, classification, statusPrediction, qa1, qa2, qa3,
+        resolution),
+      e => e.isNotNull
+    )
+  }
 
   /** Fan a flattened-issue DataFrame out into training examples.
     * Output columns: issue_key, task_rank (within-issue emission
@@ -210,13 +171,7 @@ object JiraGenerators {
       .select(
         col("issue_key"),
         col("created"),
-        posexplode(
-          filter(
-            array(summarization, classification, statusPrediction, qa1, qa2,
-              qa3, resolution),
-            e => e.isNotNull
-          )
-        ).as(Seq("task_rank", "ex"))
+        posexplode(examples(col)).as(Seq("task_rank", "ex"))
       )
       .select(
         col("issue_key"),
@@ -228,6 +183,21 @@ object JiraGenerators {
         col("ex.output").as("output"),
         col("ex.metadata").as("metadata")
       )
+
+  /** `jira_tasks(issue)`, the SQL form of [[generate]] that
+    * [[graft.GraftExtensions]] injects: one `col` row per example of the
+    * issue struct, whose fields bind by name (extra fields are
+    * ignored; a missing one fails analysis). A NULL struct yields no
+    * rows.
+    * {{{
+    *   SELECT t.task_type, t.output FROM issues
+    *   LATERAL VIEW jira_tasks(struct(issue_key, ..., comment_count)) v AS t
+    * }}}
+    */
+  def tasks(issue: Expression): Generator = {
+    val c = ColumnBridge.column(issue)
+    Explode(ColumnBridge.expression(when(c.isNotNull, examples(c.getField))))
+  }
 }
 
 /** Typed twin of [[JiraGenerators]]: same semantics as a pure Scala
@@ -235,6 +205,14 @@ object JiraGenerators {
   * the executable spec of transformer.py:214-274).
   */
 object JiraGeneratorsTyped {
+
+  /** The first 500 code points of `s`, as Python's `s[:500]` and
+    * Spark's `substring` count them (`String.take` counts UTF-16 units
+    * and can split a surrogate pair).
+    */
+  private def take500(s: String): String =
+    if (s.codePointCount(0, s.length) <= 500) s
+    else s.substring(0, s.offsetByCodePoints(0, 500))
 
   def transformIssue(issue: IssueRecord): Seq[TrainingExample] = {
     val meta = ExampleMetadata(
@@ -271,7 +249,7 @@ object JiraGeneratorsTyped {
     if (issue.title.nonEmpty && issue.priority.nonEmpty) {
       val input = s"Title: ${issue.title}\n" +
         (if (issue.description.nonEmpty)
-           s"Description: ${issue.description.take(500)}"
+           s"Description: ${take500(issue.description)}"
          else "")
       out += TrainingExample(
         "classification",
@@ -286,7 +264,7 @@ object JiraGeneratorsTyped {
       val input = s"Issue: ${issue.title}\nType: ${issue.issue_type}\n" +
         s"Priority: ${issue.priority}\n" +
         (if (issue.description.nonEmpty)
-           s"Description: ${issue.description.take(500)}"
+           s"Description: ${take500(issue.description)}"
          else "")
       out += TrainingExample(
         "status_prediction",
@@ -331,14 +309,14 @@ object JiraGeneratorsTyped {
         issue.comments.takeRight(2).map(_.body).mkString("\n")
       val input = s"Issue: ${issue.title}\n" +
         (if (issue.description.nonEmpty)
-           s"Description: ${issue.description.take(500)}\n"
+           s"Description: ${take500(issue.description)}\n"
          else "") +
         "\nHow was this issue resolved?"
       out += TrainingExample(
         "issue_resolution",
         "Based on the issue discussion, explain how this issue was resolved:",
         input,
-        resolutionContext.take(500),
+        take500(resolutionContext),
         meta
       )
     }

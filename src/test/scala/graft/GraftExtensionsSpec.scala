@@ -25,7 +25,7 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkSpec {
       .getDouble(0)
     assert(cos == 1.0)
     // the SQL function must stay bit-identical to the Column path
-    // (GraftExtensions mirrors VectorMath.vecCosine expression-level)
+    // (GraftExtensions builds it from VectorMath.vecCosine)
     val sqlCos = spark
       .sql(
         """SELECT vec_cosine(array(CAST(0.3 AS FLOAT), CAST(-1.7 AS FLOAT), CAST(2.9 AS FLOAT)),

@@ -118,4 +118,32 @@ class JiraDecodeSpec extends AnyFunSuite with SparkSpec {
     JiraPipeline.quarantined(spark, dir.resolve("raw.jsonl").toString).collect()
     assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(before))
   }
+
+  test("an object without `key` is kept with issue_key \"\" and fans out") {
+    // the reference reads issue.get("key", "") and defaults every absent
+    // field (scraper.py:204; SURVEY §1.3); no crash field is null, so
+    // P5 keeps the issue and transform_issue emits its examples
+    val texts = Seq("{}", """{"id":"7","fields":{"summary":"no key"}}""")
+    val d = Files.createTempDirectory("graft-keyless")
+    Files.write(d.resolve("raw.jsonl"), texts.mkString("\n").getBytes("UTF-8"))
+    Files.write(d.resolve("search_0.json"),
+      s"""{"startAt":0,"maxResults":2,"total":2,"issues":[${texts.mkString(",")}]}"""
+        .getBytes("UTF-8"))
+    val flat = JiraFlatten.flatten(
+      JiraPipeline.readRaw(spark, d.resolve("raw.jsonl").toString), "T")
+    val viaSource = JiraFlatten.flatten(spark.read.format("jira")
+      .option("stubDir", d.toString).option("project", "T").load(), "T")
+    val byId = flat.orderBy(col("issue_id")).collect().toSeq
+    assert(viaSource.orderBy(col("issue_id")).collect().toSeq == byId)
+    assert(byId.map(r => (r.getAs[String]("issue_id"), r.getAs[String]("issue_key"),
+      r.getAs[String]("title"), r.getAs[String]("status"))) ==
+      Seq(("", "", "", "Unknown"), ("7", "", "no key", "Unknown")))
+    // {} → the two QA rows that always fire; "no key" adds
+    // classification and status_prediction (title set, "Unknown" priority)
+    val tasks = JiraGenerators.generate(flat).select(col("task_type"))
+      .collect().map(_.getString(0)).sorted.toSeq
+    assert(tasks == Seq("classification", "question_answering",
+      "question_answering", "question_answering", "question_answering",
+      "status_prediction"))
+  }
 }

@@ -2,6 +2,7 @@ package graft.jira
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, HigherOrderFunction}
 import org.apache.spark.sql.execution.{FilterExec, InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.types._
@@ -11,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ingest paths, and its output type must not change: one
   * `CodegenFallback` expression (a `transform`/`filter` lambda) keeps
   * its operator out of codegen, and every task then builds a fresh
-  * interpreted projection.
+  * interpreted projection. The fan-out above it keeps one lambda.
   */
 class JiraFlattenPlanSpec extends AnyFunSuite with SparkSpec {
 
@@ -102,5 +103,13 @@ class JiraFlattenPlanSpec extends AnyFunSuite with SparkSpec {
     for (proj <- Seq("TEST", "TEST2"))
       assert(viaReadRaw(proj).schema == FlattenedType,
         viaReadRaw(proj).schema.treeString)
+  }
+
+  test("the fan-out over flatten holds one lambda: the outer filter") {
+    val plan = JiraGenerators.generate(viaReadRaw("TEST")).queryExecution.optimizedPlan
+    val hofs = plan.flatMap(_.expressions.flatMap(_.collect {
+      case h: HigherOrderFunction => h
+    }))
+    assert(hofs.map(_.getClass) == Seq(classOf[ArrayFilter]), plan)
   }
 }

@@ -174,6 +174,14 @@ class JiraParitySpec extends AnyFunSuite with SparkSpec {
         JiraPipeline.readRaw(spark, s"$dir/raw_issues_$proj.jsonl"),
         proj
       ))
+    // the 500 cuts count code points, as Python's [:500] does
+    val out = generateBothWays(spark.createDataset(Seq(JiraParitySpec.straddling))(
+      Encoders.product[IssueRecord]).toDF())
+    val smile = "\uD83D\uDE00"
+    assert(out.filter(_.task_type == "issue_resolution").map(_.output) ==
+      Seq("Looked at it.\n" + "c" * 485 + smile))
+    assert(out.filter(_.task_type == "classification").map(_.input) ==
+      Seq("Title: Cut me\nDescription: " + "a" * 499 + smile))
   }
 
   test("issue_resolution keeps the only comment (≡ typed twin)") {
@@ -283,5 +291,24 @@ class JiraParitySpec extends AnyFunSuite with SparkSpec {
     assert(r.processingTimeSeconds > 0.0)
     assert(r.combined.getAs[Double]("processing_time_seconds") ==
       r.processingTimeSeconds)
+  }
+}
+
+object JiraParitySpec {
+
+  /** A Resolved issue whose description and last two comments (joined)
+    * put a supplementary character (two UTF-16 units) across the 500th
+    * code point.
+    */
+  val straddling: IssueRecord = {
+    val smile = "\uD83D\uDE00"
+    IssueRecord("S-1", "1", "S", "u", "Cut me", "a" * 499 + smile + "bbbb",
+      "Resolved", "Major", "Bug", "Ann", "Bob",
+      "2024-01-01T00:00:00.000+0000", "2024-01-02T00:00:00.000+0000",
+      "2024-01-03T00:00:00.000+0000", Nil, Nil, Nil, Nil,
+      Seq(IssueComment("Bob", "2024-01-02T00:00:00.000+0000", "Looked at it."),
+        IssueComment("Ann", "2024-01-03T00:00:00.000+0000",
+          "c" * 485 + smile + "dd")),
+      2)
   }
 }
