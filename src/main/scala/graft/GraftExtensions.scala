@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Session-extensions entry point: registers the engine's custom
-  * Catalyst expressions on every session created with
+  * Catalyst expressions and the as-of join planner strategy on every
+  * session created with
   *
   * {{{
   *   --conf spark.sql.extensions=graft.GraftExtensions
@@ -22,6 +23,12 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * everywhere. `vec_cosine` and `jira_tasks` are the Column-DSL forms
   * themselves (`VectorMath.vecCosine`, `JiraGenerators.tasks`), turned
   * into Catalyst trees by `ColumnBridge.expression`.
+  *
+  * It injects no optimizer rule: operators call the fused kernels
+  * through their Column builders (`Md5Prefix60.md5Prefix60`,
+  * `VectorMath.vecSqDist` / `vecDot`, `ArrayIntersectSize.intersectSize`),
+  * so a kernel enters the plan where the operator writes it, never by
+  * a rewrite of a composed form.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -39,17 +46,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(e: SparkSessionExtensions): Unit = {
-    // strength reduction: composed md5-prefix hash → fused expression
-    e.injectOptimizerRule(_ => graft.plans.Md5PrefixRewrite)
-    // strength reduction: aggregate(zip_with(...)) squared-distance
-    // fold → codegen'd vec_sq_dist primitive loop
-    e.injectOptimizerRule(_ => graft.plans.VecSqDistRewrite)
-    // strength reduction: aggregate(zip_with(...)) dot-product fold
-    // → codegen'd vec_dot primitive loop
-    e.injectOptimizerRule(_ => graft.plans.VecDotRewrite)
-    // strength reduction: size(array_intersect(a, b)) over string
-    // arrays → single-pass counting kernel (the Jaccard verify shape)
-    e.injectOptimizerRule(_ => graft.plans.ArrayIntersectSizeRewrite)
     // whole-operator extension: the native backward as-of join
     // (logical AsOfJoin → AsOfJoinExec sorted merge)
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)

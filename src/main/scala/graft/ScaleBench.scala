@@ -803,7 +803,8 @@ object ScaleBench {
       .distinct()
       .cache()
     val ppCandN = ppCand.count()
-    val ppInter = size(array_intersect(col("sh_a"), col("sh_b")))
+    val ppInter =
+      graft.functions.ArrayIntersectSize.intersectSize(col("sh_a"), col("sh_b"))
     val ppJ = ppInter.cast("double") /
       (size(col("sh_a")) + size(col("sh_b")) - ppInter)
     val ppPairsDf = ppCand
@@ -876,11 +877,9 @@ object ScaleBench {
         col("emb"),
         transform(sequence(lit(0), lit(3)), b =>
           concat_ws("", transform(sequence(lit(0), lit(15)), j =>
-            when(aggregate(
-              zip_with(col("emb"),
-                element_at(col("planes"), (b * 16 + j + 1).cast("int")),
-                (x, p) => x * p),
-              lit(0.0d), (acc, x) => acc + x) >= 0, "1").otherwise("0")))
+            when(VectorMath.vecDot(col("emb"),
+                element_at(col("planes"), (b * 16 + j + 1).cast("int"))) >= 0,
+              "1").otherwise("0")))
         ).as("codes"))
     val msBanded = msCoded.select(
       col("vid"),

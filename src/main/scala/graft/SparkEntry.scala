@@ -109,7 +109,7 @@ object SparkEntry {
           col("total_examples"),
           array_join(
             transform(
-              array_sort(map_entries(col("task_type_distribution"))),
+              sort_array(map_entries(col("task_type_distribution"))),
               e => concat_ws(":", e.getField("key"), e.getField("value"))),
             ",").as("task_type_distribution_csv"),
           array_join(col("projects"), ",").as("projects_csv"),

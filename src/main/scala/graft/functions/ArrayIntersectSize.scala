@@ -10,8 +10,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen'd `size(array_intersect(a, b))` for string arrays — the
-  * Jaccard verify kernel of the dedup family (q21/q22/q159/q187
-  * compute `|A ∩ B|` per candidate pair, twice per Jaccard).
+  * Jaccard verify kernel of the dedup family (q22/q159/q190 and the
+  * other pair verifiers compute `|A ∩ B|` per candidate pair, twice
+  * per Jaccard) and of the stopword and head/tail vocabulary counts;
+  * operators call [[ArrayIntersectSize.intersectSize]].
   *
   * The built-in route materializes the intersection ARRAY (per-pair
   * allocation + copy of the matched shingles) only to take its
@@ -19,11 +21,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * hash probes and allocates nothing but two per-row hash sets.
   *
   * Semantics are bit-identical to `size(array_intersect(a, b))`
-  * under the default (non-legacy) size semantics, which is what makes
-  * [[graft.plans.ArrayIntersectSizeRewrite]] observationally pure:
-  * distinct matched elements are counted once (duplicates in `a`
-  * don't double-count), a null element counts once iff null occurs
-  * in BOTH arrays, and a null input array nulls the result.
+  * under the default (non-legacy) size semantics
+  * (ArrayIntersectSizeSpec pins them): distinct matched elements are
+  * counted once (duplicates in `a` don't double-count), a null element
+  * counts once iff null occurs in BOTH arrays, and a null input array
+  * nulls the result. Other element types fail analysis.
   */
 case class ArrayIntersectSize(left: Expression, right: Expression)
     extends BinaryExpression {

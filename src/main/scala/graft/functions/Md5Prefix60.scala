@@ -15,10 +15,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * re-parses it per row; this one does a single digest and two loads.
   *
   * Used by the train/test split (q49), stratified sampling (q71),
-  * the KMV sketch input (q58), and the pipeline split bucket — the
-  * DuckDB oracle mirrors the same value as
-  * `('0x' || substr(md5(s), 1, 15))::BIGINT`. Md5Prefix60Spec pins
-  * bit-equality with the composed Catalyst form.
+  * the KMV sketch input (q58), the pipeline split bucket, the seeded
+  * MinHash/Bloom hashes of the dedup family and the document
+  * fingerprint — the DuckDB oracle mirrors the same value as
+  * `('0x' || substr(md5(s), 1, 15))::BIGINT`. Callers write
+  * [[Md5Prefix60.md5Prefix60]]; Md5Prefix60Spec pins bit-equality
+  * with the composed Catalyst form (`TextFunctions.hash60Composed`).
   */
 case class Md5Prefix60(child: Expression) extends UnaryExpression {
 

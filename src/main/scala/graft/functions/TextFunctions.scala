@@ -162,7 +162,7 @@ object TextFunctions {
   def fingerprintHex(c: Column): Column = md5(lower(cleanText(c)))
 
   def fingerprintLong(c: Column): Column =
-    conv(substring(fingerprintHex(c), 1, 15), 16, 10).cast("long")
+    Md5Prefix60.md5Prefix60(lower(cleanText(c)))
 
   /** 60-bit md5-prefix hash of an arbitrary key — the one hash
     * convention shared by the train/test split (q49), the KMV sketch

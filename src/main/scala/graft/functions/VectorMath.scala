@@ -19,9 +19,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   *
   * Nulls: null array → null result; a length mismatch or a null
   * element also nulls the result — exactly the
-  * `aggregate(zip_with(...))` fold semantics, which makes the
-  * [[graft.plans.VecDotRewrite]] strength reduction observationally
-  * pure.
+  * `aggregate(zip_with(...))` fold semantics of
+  * `Similarity.dotProductHof`, which VectorMathSpec compares it with.
   */
 case class VectorDot(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -41,10 +40,8 @@ case class VectorDot(left: Expression, right: Expression)
     }
   }
 
-  // Null semantics mirror the aggregate(zip_with(...)) fold exactly
-  // (length mismatch → null via zip_with padding; null element →
-  // null) so the VecDotRewrite strength reduction is observationally
-  // pure.
+  // Null semantics mirror the aggregate(zip_with(...)) fold exactly:
+  // length mismatch → null via zip_with padding; null element → null.
   override def nullable: Boolean = true
 
   override def nullSafeEval(a: Any, b: Any): Any = {
@@ -109,7 +106,9 @@ case class VectorDot(left: Expression, right: Expression)
   * `list_sum(list_transform(list_zip(...)))` oracle), but compiled to
   * a primitive loop instead of per-element interpretation. The k-means
   * assignment scan (k distance evaluations per row per round) is the
-  * hot path this exists for.
+  * hot path this exists for. Operators call [[VectorMath.vecSqDist]];
+  * the fold itself (`Clustering.sqDistHof`) is the reference
+  * VectorMathSpec compares it with.
   */
 case class VectorSqDist(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -138,11 +137,10 @@ case class VectorSqDist(left: Expression, right: Expression)
     }
   }
 
-  // Null semantics mirror the aggregate(zip_with(...)) fold exactly,
-  // so the VecSqDistRewrite strength reduction is observationally
-  // pure: zip_with pads a length mismatch with nulls and any null
-  // element nulls the whole fold — this expression returns null in
-  // both cases.
+  // Null semantics mirror the aggregate(zip_with(...)) fold exactly:
+  // zip_with pads a length mismatch with nulls and any null element
+  // nulls the whole fold — this expression returns null in both
+  // cases.
   override def nullable: Boolean = true
 
   override def nullSafeEval(a: Any, b: Any): Any = {

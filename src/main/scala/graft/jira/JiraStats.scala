@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * deterministic sorted form is the comparable one (SURVEY §2.10).
   * Both aggregations are partial-aggregated map-side; the distribution
   * map is built with map_from_entries over a sorted entry list so the
-  * map's key order is deterministic too.
+  * map's key order is deterministic too (`sort_array`: the entries are
+  * null-free orderable structs, so no lambda comparator is needed).
   */
 object JiraStats {
 
@@ -24,7 +25,7 @@ object JiraStats {
       .agg(
         sum(col("n")).as("total_examples"),
         map_from_entries(
-          array_sort(collect_list(struct(col("task_type"), col("n"))))
+          sort_array(collect_list(struct(col("task_type"), col("n"))))
         ).as("task_type_distribution")
       )
     val sets = examples

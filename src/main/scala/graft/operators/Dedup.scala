@@ -2,6 +2,8 @@ package graft.operators
 
 import graft.util.Caches._
 import graft.Tables
+import graft.functions.ArrayIntersectSize.intersectSize
+import graft.functions.Md5Prefix60
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -168,11 +170,10 @@ object Dedup {
   private val NumBands = 4 // 2 rows per band
 
   /** 60-bit seeded hash of a string via md5 — portable across engines
-    * (same construction in the DuckDB oracle).
+    * (the DuckDB oracle composes the same value from md5's hex).
     */
   private[operators] def seededHash(seed: Int, s: Column): Column =
-    conv(substring(md5(concat(lit(s"$seed:"), s)), 1, 15), 16, 10)
-      .cast("long")
+    Md5Prefix60.md5Prefix60(concat(lit(s"$seed:"), s))
 
   /** Seeded xxhash64 — the fast production hash (codegen'd, ~10× md5);
     * not portable to the DuckDB oracle, so the gated queries keep md5.
@@ -300,9 +301,9 @@ object Dedup {
             m => m
           )
         ).as("matches"),
-        size(array_intersect(col("sh_a"), col("sh_b"))).as("inter"),
+        intersectSize(col("sh_a"), col("sh_b")).as("inter"),
         (size(col("sh_a")) + size(col("sh_b")) -
-          size(array_intersect(col("sh_a"), col("sh_b")))).as("union_n")
+          intersectSize(col("sh_a"), col("sh_b"))).as("union_n")
       )
       .distinct()
   }
@@ -2196,7 +2197,7 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"))
       .distinct()
     val full = d.select(col("doc_id"), col("sh"))
-    val inter = size(array_intersect(col("sh_a"), col("sh_b")))
+    val inter = intersectSize(col("sh_a"), col("sh_b"))
     val j = inter.cast("double") /
       (size(col("sh_a")) + size(col("sh_b")) - inter)
     cand

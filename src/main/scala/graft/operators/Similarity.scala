@@ -11,9 +11,10 @@ import org.apache.spark.sql.functions._
   * cluster-pruned variant as the scale path, and embedding-cosine
   * near-dup pairs.
   *
-  * All vector math is built-in higher-order array functions
-  * (`zip_with` + `aggregate`), computed in double left-to-right — the
-  * same accumulation the DuckDB oracle uses, so results are
+  * Vector math runs in the codegen'd `VectorMath` kernels where they
+  * take the input types, and in `zip_with` + `aggregate` folds
+  * elsewhere; both accumulate in double left-to-right — the same
+  * accumulation the DuckDB oracle uses, so results are
   * bit-comparable.
   *
   * Scale design: the query set / centroid set is always the broadcast
@@ -811,7 +812,8 @@ object Similarity {
                 transform(
                   slice(col("planes"), b * planesPerBand + 1,
                     lit(planesPerBand)),
-                  p => when(dotProductHof(p, col("embedding")) >= 0, "1")
+                  p => when(graft.functions.VectorMath
+                      .vecDot(p, col("embedding")) >= 0, "1")
                     .otherwise("0")
                 ),
                 ""
@@ -1403,11 +1405,8 @@ object Similarity {
         graft.functions.VectorMath
           .vecSqDist(col("eb"), col("ea").cast("array<double>"))
           .as("d2o"),
-        aggregate(
-          zip_with(col("yb"), col("ya"), (x, y) => (x - y) * (x - y)),
-          lit(0.0),
-          (acc, v) => acc + v
-        ).as("d2p")
+        graft.functions.VectorMath.vecSqDist(col("yb"), col("ya"))
+          .as("d2p")
       )
       .filter(col("d2o") > 0)
       .select(
@@ -1441,15 +1440,8 @@ object Similarity {
         col("vec_id"),
         col("label"),
         sqrt(
-          aggregate(
-            zip_with(
-              col("embedding"),
-              col("centroid"),
-              (x, c) => (x.cast("double") - c) * (x.cast("double") - c)
-            ),
-            lit(0.0),
-            (acc, v) => acc + v
-          )
+          graft.functions.VectorMath
+            .vecSqDist(col("embedding"), col("centroid"))
         ).as("dist")
       )
     val stats = dists

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.util.Caches._
 import graft.Tables
+import graft.functions.ArrayIntersectSize.intersectSize
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -2682,7 +2683,7 @@ object TextAnalysis {
               .cast("double") / size(t)),
           6
         ).as("symbol_frac"),
-        size(array_intersect(array_distinct(t), stops))
+        intersectSize(array_distinct(t), stops)
           .cast("long")
           .as("n_stopwords")
       )
@@ -3579,7 +3580,7 @@ object TextAnalysis {
       )
       .select(
         col("source"),
-        size(array_intersect(col("h"), col("tl"))).cast("long").as("both"),
+        intersectSize(col("h"), col("tl")).cast("long").as("both"),
         size(col("h")).cast("long").as("nh"),
         size(col("tl")).cast("long").as("nt")
       )

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues,
   TTLConfig, ValueState}
+import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
 import java.sql.Timestamp
 
 /** Structured Streaming twins of the batch event operators
@@ -27,11 +28,10 @@ object EventStreams {
     * Stateful operators allocate one state store per shuffle
     * partition (a stream-stream join allocates four); with tiny
     * per-key state the store setup/commit dominates runtime, so the
-    * number of state partitions is sized to the load rather than
-    * inherited from the batch shuffle width. It is a start-time
-    * choice pinned into the checkpoint — production deployments with
-    * wide state raise `SPARK_GRAFT_STREAM_PARTITIONS`; the batch
-    * setting is restored once the stream drains.
+    * number of state partitions is sized to the load (four) rather
+    * than inherited from the batch shuffle width. It is a start-time
+    * choice pinned into the checkpoint; the batch setting is restored
+    * once the stream drains.
     */
   def runAvailableNow(
       df: DataFrame,
@@ -44,23 +44,22 @@ object EventStreams {
     // drain runs the streaming engine end to end; a steady-state
     // re-run of the same logical stream gets the drained table back
     // instead of replaying the microbatch/state-store protocol on
-    // identical input. Keyed on (sink name, mode) — canonicalized
-    // STREAMING plans are not stable across constructions (leaf
-    // relation attributes are re-created per read), and every call
-    // site binds one sink name to one logical stream over the static
-    // test tables. Cleared between queries by Caches.releaseAll, so
-    // each bench query still pays its own drain in its warmup pass;
-    // an incremental re-drain over a GROWING directory (not a shape
-    // this repo's gated surface uses) must bypass the memo by
-    // releasing caches or using a fresh name.
-    s"drain:$name:$mode",
+    // identical input. Keyed on (sink name, mode, what the stream
+    // reads) — canonicalized STREAMING plans are not stable across
+    // constructions (leaf relation attributes are re-created per
+    // read), so the key names the sources instead: a drain of the
+    // same stream over another directory is a different artifact.
+    // Cleared between queries by Caches.releaseAll, so each bench
+    // query still pays its own drain in its warmup pass; an
+    // incremental re-drain over a GROWING directory (not a shape this
+    // repo's gated surface uses) must bypass the memo by releasing
+    // caches or using a fresh name.
+    s"drain:$name:$mode:${sources(df)}",
     Seq.empty
   ) {
     val spark = df.sparkSession
-    val statePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "4")
     val batchShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
+    spark.conf.set("spark.sql.shuffle.partitions", 4L)
     // These are throwaway drain-once checkpoints (offset/commit logs +
     // state deltas, fsync'd per micro-batch) — putting them on tmpfs
     // keeps the state-store lifecycle off the disk, where concurrent
@@ -103,6 +102,17 @@ object EventStreams {
     }
     spark.table(qname)
   }
+
+  /** What a stream reads: format, paths and options of each streaming
+    * file source (the only streaming reader, [[readTableStream]]).
+    */
+  private def sources(df: DataFrame): String =
+    df.queryExecution.analyzed.collectLeaves().collect {
+      case s: StreamingRelation =>
+        val d = s.dataSource
+        s"${d.className}${d.paths.mkString("[", ",", "]")}" +
+          d.options.toSeq.sorted.mkString("{", ",", "}")
+    }.mkString(";")
 
   private def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))

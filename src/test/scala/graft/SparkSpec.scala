@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.internal.SQLConf
 
 /** The session every spec runs on: the production shape from
@@ -27,28 +26,10 @@ trait SparkSpec {
     }
   }
 
-  /** Runs `body` with the optimizer rewrites of [[GraftExtensions]]
-    * excluded, so the composed built-in forms they replace evaluate as
-    * written — the independent reference of a kernel differential
-    * test.
-    */
-  def withoutRewrites[T](body: => T): T =
-    withConf(SQLConf.OPTIMIZER_EXCLUDED_RULES.key ->
-      Seq(plans.Md5PrefixRewrite, plans.VecSqDistRewrite,
-        plans.VecDotRewrite, plans.ArrayIntersectSizeRewrite)
-        .map(_.ruleName).mkString(","))(body)
-
   /** Runs `body` with every expression evaluated by its interpreted
     * `eval`: no whole-stage codegen and no generated projections.
     */
   def interpreted[T](body: => T): T =
     withConf("spark.sql.codegen.wholeStage" -> "false",
       SQLConf.CODEGEN_FACTORY_MODE.key -> "NO_CODEGEN")(body)
-
-  /** Whether the optimized plan of `df` still evaluates an expression
-    * satisfying `p` — the guard that a reference escaped the rewrites
-    * (call it inside [[withoutRewrites]]).
-    */
-  def optimizedKeeps(df: DataFrame)(p: Expression => Boolean): Boolean =
-    df.queryExecution.optimizedPlan.exists(_.expressions.exists(_.exists(p)))
 }

@@ -44,6 +44,26 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
     assert(streaming.toSeq == batch.toSeq)
   }
 
+  test("a drain memo keys on what the stream reads") {
+    def drain(sf: String) = EventStreams.runAvailableNow(
+      EventStreams.windowedCounts(
+        EventStreams.readEvents(spark, s"/root/testdata/$sf")),
+      "memo_key_counts",
+      "complete")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    graft.util.Caches.releaseAll()
+    val small = drain("sf0.001")
+    assert(drain("sf0.001") eq small, "the same stream must hit the memo")
+    // another directory, no releaseAll in between
+    val big = rows(drain("sf0.01"))
+    graft.util.Caches.releaseAll()
+    val fresh = rows(drain("sf0.01"))
+    graft.util.Caches.releaseAll()
+    assert(big == fresh)
+    assert(big != rows(small))
+  }
+
   test("stateful sessionization emits closed sessions matching batch") {
     runToMemory(
       EventStreams.sessionize(EventStreams.readEvents(spark, dir)).toDF(),
