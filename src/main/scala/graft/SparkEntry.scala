@@ -1274,10 +1274,6 @@ object SparkEntry {
         sys.props("java.io.tmpdir"),
         s"graft-lake-${ProcessHandle.current().pid()}-" +
           s"${math.abs(dir.hashCode.toLong)}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
       // the lake materialization is the drain artifact — memoized by
       // path (the runAvailableNow convention: streaming leaves
       // canonicalize unstably, so the key is the sink identity), so a
@@ -1285,9 +1281,10 @@ object SparkEntry {
       // wiping and re-streaming it on every construction
       val lakePath = graft.util.Caches.memoizedIn(
         s, s"q107_lake:${base.getAbsolutePath}", Seq.empty) {
-        rm(base)
+        io.LayoutOnce.rm(base)
         if (lakeCleanupRegistered.add(base.getAbsolutePath)) {
-          Runtime.getRuntime.addShutdownHook(new Thread(() => rm(base)))
+          Runtime.getRuntime.addShutdownHook(
+            new Thread(() => io.LayoutOnce.rm(base)))
         }
         io.Sinks.streamEventsToLake(
           streaming.EventStreams.readEvents(s, dir),

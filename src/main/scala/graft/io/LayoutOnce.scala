@@ -15,6 +15,7 @@ object LayoutOnce {
 
   private val laidOut = scala.collection.mutable.HashSet[String]()
 
+  /** Deletes `f` and, if it is a directory, everything under it. */
   def rm(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rm))
     f.delete(); ()

@@ -546,26 +546,35 @@ object CoPurchaseGraph {
       .agg(count(lit(1)).as("n_nodes"))
   }
 
-  /** The frontier-expansion core of [[bfsLevelHistogram]]: per-node
-    * minimum hop distance (id, lvl) for every node REACHED from
-    * `seed` within `maxHops` (the seed itself at lvl 0). Unreached
-    * nodes are absent — the histogram's -1 class is its caller's
-    * left-join, and eccentricity consumers (double sweep) read the
-    * frame's max directly. Per round: one frontier-keyed join + an
-    * anti-join against the visited set, lineage truncated.
-    */
+  /** [[bfsLevelsFrom]] from the one node `seed`. */
   def bfsLevelsFrom(
       spark: SparkSession,
       sym: DataFrame,
       seed: Long,
       maxHops: Int
+  ): DataFrame =
+    bfsLevelsFrom(sym, spark.range(1).select(lit(seed).as("id")), maxHops)
+
+  /** The frontier-expansion core of [[bfsLevelHistogram]], the double
+    * sweep and the cluster radius census: per-node minimum hop
+    * distance (id, lvl) from the nearest node of `seeds` (an `id`
+    * frame, the seeds themselves at lvl 0) for every node REACHED
+    * within `maxHops`. Unreached nodes are absent — the histogram's
+    * -1 class is its caller's left-join, and eccentricity consumers
+    * (double sweep) read the frame's max directly. Per round: one
+    * frontier-keyed join + an anti-join against the visited set,
+    * lineage truncated.
+    */
+  def bfsLevelsFrom(
+      sym: DataFrame,
+      seeds: DataFrame,
+      maxHops: Int
   ): DataFrame = graft.util.Caches.memoized(
-    s"bfsLevels:$seed:$maxHops",
-    Seq(sym)
+    s"bfsLevels:$maxHops",
+    Seq(sym, seeds)
   ) {
-    var levels = spark
-      .range(1)
-      .select(lit(seed).as("id"), lit(0L).as("lvl"))
+    var levels = seeds
+      .select(col("id"), lit(0L).as("lvl"))
       .localCheckpoint(true)
     var frontier = levels
     var lvl = 1L

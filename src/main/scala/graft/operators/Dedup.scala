@@ -2443,12 +2443,14 @@ object Dedup {
     )
     // five unrolled peel rounds: alive := {n : deg_alive(n) >= 2}.
     // Each round references the previous round's frame TWICE (both
-    // join sides), so even with per-round caches the ANALYZED tree
-    // doubles per round (2^5 copies of the pair generator — 3279
-    // nodes, ~0.9 s of driver re-analysis per pass). The loop is a
-    // self-referencing peel, so it gets the mechanism-1 memo like its
-    // truss/coreness siblings: computed once per session, the
-    // survivor set returned as a checkpoint-backed leaf.
+    // join sides), so each round is checkpointed: with per-round
+    // caches the tree doubled per round (2^5 copies of the pair
+    // generator), and so did the plan description every action logs
+    // (105 M characters for the last round at sf0.001, enough to
+    // exhaust a 4 GB driver). The loop is a self-referencing peel, so
+    // it gets the mechanism-1 memo like its truss/coreness siblings:
+    // computed once per session, the survivor set returned as a
+    // checkpoint-backed leaf.
     val aliveFinal = graft.util.Caches
       .memoizedIn(spark, "coreAudit.alive5", Seq(sym, nodes)) {
         var alive = nodes.select(col("id").as("n"))
@@ -2461,9 +2463,9 @@ object Dedup {
             .agg(count(lit(1)).as("deg"))
             .filter(col("deg") >= 2)
             .select(col("a").as("n"))
-            .cacheTracked()
+            .localCheckpoint(true)
         }
-        alive.localCheckpoint()
+        alive
       }
     val core = aliveFinal.select(col("n").as("id"), lit(1L).as("in_core"))
     labels
@@ -4235,40 +4237,9 @@ object Dedup {
       .run(nodes, pairs.select(col("doc_a").as("src"),
         col("doc_b").as("dst")))
       .cacheTracked()
-    // seeds: each cluster's min id IS its label (min-label CC).
-    // The multi-source walk is a memoized derive-once artifact
-    // (round 13, the CC/BFS treatment): checkpoints truncate
-    // per-round lineage, the memo hands steady-state re-runs the
-    // materialized level frame back.
-    val levels = graft.util.Caches.memoized(
-      "clusterRadiusLevels",
-      Seq(sym, labels)
-    ) {
-      var levels = labels
-        .select(col("label").as("id"))
-        .distinct()
-        .select(col("id"), lit(0L).as("lvl"))
-        .localCheckpoint(true)
-      var frontier = levels
-      var lvl = 1L
-      var done = false
-      while (lvl <= 20L && !done) {
-        val next = frontier
-          .join(sym, frontier("id") === sym("src"))
-          .select(col("dst").as("id"))
-          .distinct()
-          .join(levels, Seq("id"), "left_anti")
-          .select(col("id"), lit(lvl).as("lvl"))
-          .localCheckpoint(true)
-        if (next.isEmpty) done = true
-        else {
-          levels = levels.unionByName(next).localCheckpoint(true)
-          frontier = next
-          lvl += 1
-        }
-      }
-      levels
-    }
+    // seeds: each cluster's min id IS its label (min-label CC)
+    val levels = CoPurchaseGraph.bfsLevelsFrom(
+      sym, labels.select(col("label").as("id")).distinct(), 20)
     val radii = labels
       .join(levels, Seq("id"))
       .groupBy(col("label"))

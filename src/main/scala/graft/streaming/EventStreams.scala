@@ -98,7 +98,7 @@ object EventStreams {
       }
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", batchShuffle)
-      deleteRecursively(ckpt)
+      graft.io.LayoutOnce.rm(ckpt)
     }
     spark.table(qname)
   }
@@ -113,11 +113,6 @@ object EventStreams {
         s"${d.className}${d.paths.mkString("[", ",", "]")}" +
           d.options.toSeq.sorted.mkString("{", ",", "}")
     }.mkString(";")
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
-  }
 
   /** Streaming read of one test-dir parquet table (file source —
     * stands in for any append-only feed). Shared by the event stream
