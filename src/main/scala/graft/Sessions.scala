@@ -7,8 +7,8 @@ import org.apache.spark.sql.SparkSession
 /** The one place a SparkSession is built: every main and every spec
   * gets the production shape from here — `local[cpus]`, shuffle
   * partitions = cpus, UTC, AQE on, UI off, a 2000-entry codegen class
-  * cache, [[GraftExtensions]] (the injected functions and optimizer
-  * rewrites), log level WARN.
+  * cache, [[GraftExtensions]] (the injected SQL functions, the
+  * `jira_tasks` generator and the as-of join strategy), log level WARN.
   */
 object Sessions {
 

@@ -16,8 +16,7 @@ object Verify {
       case None => _ => true
     }
     // production session shape: extensions on, so the injected
-    // functions AND the md5-prefix optimizer rewrite run under the
-    // oracle gate
+    // functions run under the oracle gate
     val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>

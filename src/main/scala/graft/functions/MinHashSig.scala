@@ -18,8 +18,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * are precomputed once. One traversal of the array computes all k
   * minima, where the higher-order form runs k interpreted
   * transform+array_min passes (HOF lambdas break whole-stage codegen).
-  * MinHashSigSpec proves the two bit-identical; ScaleBench measures
-  * the win on the 100k-doc corpus.
+  * MinHashSigSpec proves the two bit-identical.
   *
   * A null shingle folds the seed head itself into the minimum —
   * exactly what the HOF form computes, since Spark's xxhash64 skips

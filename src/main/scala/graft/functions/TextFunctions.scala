@@ -98,7 +98,8 @@ object TextFunctions {
     *
     * DuckDB twin: SparkEntry.qMicroCte. The double [[qualityScore]]
     * stays for spec-level sanity checks only; `|q_micro/1e6 − q| ≤
-    * 2e-6` is pinned by QualityMicroSpec.
+    * 2e-6` is pinned by Round9OpsSpec "qualityMicro is the integer
+    * twin of the double quality score".
     */
   def qualityMicro(c: Column): Column = {
     import IntMath.idivHalfUp

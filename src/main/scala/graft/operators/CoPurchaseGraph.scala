@@ -388,9 +388,9 @@ object CoPurchaseGraph {
     * round's materializes. The whole peel is a memoized derive-once
     * artifact (round 13) — steady-state re-runs read the result.
     * Every graph has a node of degree ≤ 2m/n < 3m/n, so each round
-    * peels a constant fraction — the hub-adversarial ScaleBench row
-    * pins that a planted clique survives a 1M-spoke star in these
-    * few rounds.
+    * peels a constant fraction — CoPurchaseGraphSpec "densestSubgraphPeel:
+    * star peels away, clique core survives" pins that a planted K24
+    * survives a 2000-spoke star in two rounds.
     */
   def densestSubgraphPeel(
       spark: SparkSession,
@@ -527,10 +527,12 @@ object CoPurchaseGraph {
 
   /** BFS level histogram over a caller-prepared symmetric (src, dst)
     * frame — frontier expansion from `seed`, `maxHops`-capped,
-    * unreached nodes at level −1; the engine behind q465 and the
-    * ScaleBench diameter row. Each round is one frontier-keyed hash
-    * join + an anti-join against the visited set (frontier-sized,
-    * not graph-sized) with tracked caches truncating lineage.
+    * unreached nodes at level −1; the engine behind q465. Each round
+    * is one frontier-keyed hash join + an anti-join against the
+    * visited set (frontier-sized, not graph-sized) with tracked caches
+    * truncating lineage. CoPurchaseGraphSpec "bfsLevelHistogram: chain
+    * levels, disconnected at -1, hop cap" pins a 2000-spoke hub level
+    * and a chain cut at the hop cap.
     */
   def bfsLevelHistogram(
       spark: SparkSession,

@@ -187,14 +187,15 @@ object Communities {
     )
 
   /** The integer HITS engine behind [[hitsCopyFlow]], seamed on the
-    * directed (src, dst) edge frame so ScaleBench can drive it on
-    * adversarial synthetic graphs. Guards the documented BIGINT
+    * directed (src, dst) edge frame. Guards the documented BIGINT
     * bound: after 4 un-normalized rounds scores are bounded by
     * (max degree)⁸, so max in/out degree must stay ≤ 200 (200⁸ =
     * 2.56·10¹⁸ < 2⁶³) — one cheap aggregate on the checkpointed edge
     * frame enforces it, turning the documented fallback decision
     * (switch to the L1-normalized double form, rank-identical) from
-    * a silent wrap into a loud error.
+    * a silent wrap into a loud error. CommunitiesSpec "integer HITS:
+    * a 200-spoke star sits on the degree bound, 201 spokes trip it"
+    * pins the exact scores at the bound and the trip past it.
     */
   def hitsFrom(edges: DataFrame): DataFrame = graft.util.Caches.memoized(
     // memoized like lpLabelsFrom: checkpoints inside keep consumer
@@ -285,7 +286,9 @@ object Communities {
     )
 
   /** [[dbscanGrid]]'s engine, seamed on a (vec_id, x, y) points frame
-    * so ScaleBench can drive it on adversarial synthetic corpora.
+    * (CommunitiesSpec "dbscanGridPoints: tight anchors cluster apart;
+    * occupancy 4096 passes, 4097 trips" drives both the bounded
+    * spread shape and the occupancy guard below).
     *
     * Occupancy pre-flight (the q171 join-blowup treatment): the grid
     * trick bounds candidates by CELL OCCUPANCY, not by n — which is a

@@ -4267,8 +4267,8 @@ object Dedup {
     * Scale: the pair artifact is collision-linear and shared across
     * thresholds (one shingle inversion, three filters); each census
     * is the pointer-doubling CC (O(log diameter) rounds, the q72
-    * machinery with its 1M-node ScaleBench row) over an
-    * edges-participating node set.
+    * machinery; ConnectedComponentsSpec pins the round bound on a
+    * long chain) over an edges-participating node set.
     */
   def percolationCurve(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.IntMath.microRatio

@@ -91,7 +91,8 @@ object Profile {
     * n_zero_registers and sum_t = Σ 2^(53−M_j) over occupied
     * registers — so both engines agree bit for bit. The HLL estimate
     * α·m²/S (S = (sum_t + n_zero·2^53)/2^53) and its ±2σ bound vs
-    * exact live in HllSketchSpec, next to a cross-check against
+    * exact live in ProfileSpec "HLL sketch cardinality stays inside
+    * its error bound", next to a cross-check against
     * Spark's built-in approx_count_distinct; the gate compares only
     * the deterministic registers (the q220 convention: derived
     * floats belong in specs, not hashed columns).

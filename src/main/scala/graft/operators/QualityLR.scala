@@ -67,9 +67,10 @@ object QualityLR {
     featuresFrom(Tables.documents(spark, dir))
 
   /** The feature pass over a prepared (doc_id, source, text) frame —
-    * the ScaleBench seam. Tokenization and the stopword list are the
-    * shared [[graft.functions.TextFunctions]] ones (the q142
-    * contract), not private copies.
+    * shared by [[features]] and the streaming quality gate.
+    * Tokenization and the stopword list are the shared
+    * [[graft.functions.TextFunctions]] ones (the q142 contract), not
+    * private copies.
     */
   def featuresFrom(docs: DataFrame): DataFrame = {
     import graft.functions.IntMath.idivHalfUp

@@ -1271,10 +1271,11 @@ object Relational {
     * incident to a surviving edge (the q459 convention).
     *
     * Scale: the degree frame is derived once; each census is the
-    * pointer-doubling CC (O(log diameter) rounds, the q72 machinery
-    * with its 1M-node ScaleBench row) over an anti-joined induced
-    * edge set; the removal sets are TakeOrdered top-k (per-partition
-    * heaps, no global sort), broadcast into the anti-joins.
+    * pointer-doubling CC (O(log diameter) rounds, the q72 machinery;
+    * ConnectedComponentsSpec pins the round bound) over an
+    * anti-joined induced edge set; the removal sets are TakeOrdered
+    * top-k (per-partition heaps, no global sort), broadcast into the
+    * anti-joins.
     */
   def attackRobustness(spark: SparkSession, dir: String): DataFrame =
     attackRobustnessFrom(

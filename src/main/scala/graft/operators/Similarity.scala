@@ -1128,19 +1128,13 @@ object Similarity {
     * before the exchange, so no query partition ever materializes
     * the full corpus sorted.
     */
-  def pqAdcTopK(spark: SparkSession, dir: String): DataFrame =
-    pqAdcTopKFrom(
-      Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    )
-
-  /** The PQ train→encode→ADC pipeline over a prepared
-    * (vec_id, embedding) frame (ScaleBench runs it on a replicated
-    * 100k-vector corpus).
-    */
-  def pqAdcTopKFrom(vectors: DataFrame): DataFrame = {
+  def pqAdcTopK(spark: SparkSession, dir: String): DataFrame = {
     val m = 4; val subDim = 16; val k = 16
     val nQueries = 5; val topK = 10
-    val e = vectors.cacheTracked()
+    val e = Tables
+      .embeddings(spark, dir)
+      .select(col("vec_id"), col("embedding"))
+      .cacheTracked()
     // All m subspaces in ONE frame keyed by subspace id `b` — one
     // corpus pass emits every (b, vec_id, subvector) cell, and the
     // Lloyd round / encode / LUT stages below each run ONCE over the
@@ -1291,7 +1285,7 @@ object Similarity {
     * (BroadcastNestedLoopJoin over the tiny anchor frame), per-anchor
     * rank via the top-k window (WindowGroupLimit partial heaps). At
     * 100 TB the scan side swaps to the IVF / PQ candidate generators
-    * (`ivfTopKProbe` / `pqAdcTopKFrom` seams) with this same
+    * (`ivfTopKProbe` / [[pqAdcTopK]]) with this same
     * label-filter + rank tail.
     */
   def hardNegatives(
@@ -1508,7 +1502,7 @@ object Similarity {
     * inverted lists; each vector is PQ-encoded on its RESIDUAL
     * x − c(list) (residuals concentrate near 0, so the shared 4×16
     * codebook spends its codes where the mass is); a query probes its
-    * `nProbe` nearest lists and scores candidates with a
+    * `nProbe` = 2 nearest lists and scores candidates with a
     * per-(query, list) ADC lookup table built from the QUERY residual
     * against that list's centroid.
     *
@@ -1525,33 +1519,24 @@ object Similarity {
     * fold as the float×double branch and the oracle's `list_sum`).
     *
     * Determinism (what the oracle replays): coarse init = lowest
-    * `coarseK` vec_ids, one Lloyd round with dim means rounded to 6
+    * `coarseK` = 4 vec_ids, one Lloyd round with dim means rounded to 6
     * (the q93 contract); PQ init per subspace = the `pqK` lowest
     * vec_ids' residual subvectors, one Lloyd round, same rounding;
     * every argmin ties on the lower cluster id; probe ranking ties
     * (dist, list); final ranking ties (adc, vec_id).
     */
-  def ivfPqTopK(spark: SparkSession, dir: String): DataFrame =
-    ivfPqTopKFrom(
-      Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    )
-
-  /** The IVFADC pipeline over a prepared (vec_id, embedding) frame —
-    * the ScaleBench seam (runs it on a replicated 100k-vector
-    * corpus).
-    */
-  def ivfPqTopKFrom(
-      vectors: DataFrame,
-      coarseK: Int = 4,
-      nProbe: Int = 2
-  ): DataFrame = {
+  def ivfPqTopK(spark: SparkSession, dir: String): DataFrame = {
+    val coarseK = 4; val nProbe = 2
     val m = 4; val subDim = 16; val pqK = 16
     val nQ = 5; val topK = 10
     // double×double codegen sqdist (same left-to-right fold the
     // oracle's list_sum replays; VectorMathSpec diffs it vs the HOF)
     def sqdDD(x: Column, c: Column): Column =
       graft.functions.VectorMath.vecSqDist(x, c)
-    val e = vectors.cacheTracked()
+    val e = Tables
+      .embeddings(spark, dir)
+      .select(col("vec_id"), col("embedding"))
+      .cacheTracked()
     // — coarse quantizer: the q93/q25 Lloyd contract at k = coarseK
     val cInit = e
       .orderBy(col("vec_id"))

@@ -1500,9 +1500,9 @@ object TextAnalysis {
     // half-up burstiness ratio. The Poisson adaptation ratio
     // E[df]/df = n_docs·(1−e^(−cf/n_docs))/df needs libm exp — not
     // correctly rounded, so it differs across engines/versions — and
-    // therefore lives in TermBurstinessSpec (recomputed from the
-    // emitted exact inputs, asserted within tolerance), never in an
-    // emitted column (round-9 convention).
+    // therefore lives in Round8dOpsSpec "q220 burstiness…"
+    // (recomputed from the emitted exact inputs, asserted within
+    // tolerance), never in an emitted column (round-9 convention).
     perTerm
       .crossJoin(broadcast(d))
       .select(
@@ -2543,19 +2543,9 @@ object TextAnalysis {
     * doc_id (bounded |langs|-row partitions). The standard sparse NB
     * topology at any corpus size.
     */
-  def nbLangId(spark: SparkSession, dir: String): DataFrame =
-    nbLangIdFrom(
-      Tables
-        .documents(spark, dir)
-        .select(col("doc_id"), col("lang"), col("text"))
-    )
-
-  /** The NB train→score pipeline over a prepared (doc_id, lang,
-    * text) frame (ScaleBench runs it on a replicated 100k-doc
-    * corpus).
-    */
-  def nbLangIdFrom(labeled: DataFrame): DataFrame = {
-    val docs = labeled
+  def nbLangId(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables
+      .documents(spark, dir)
       .select(col("doc_id"), col("lang"), tokens(col("text")).as("t"))
     val toks = docs
       .select(col("doc_id"), col("lang"), explode(col("t")).as("w"))
@@ -3505,14 +3495,9 @@ object TextAnalysis {
     * mean diff) like q127 — absolute thresholds do not transfer
     * across corpus sizes.
     */
-  def mooreLewisSelect(spark: SparkSession, dir: String): DataFrame =
-    mooreLewisSelectFrom(Tables.documents(spark, dir))
-
-  /** The Moore-Lewis chain over a prepared (doc_id, source, text)
-    * frame — the ScaleBench seam.
-    */
-  def mooreLewisSelectFrom(docs: DataFrame): DataFrame = {
-    val toks = docs
+  def mooreLewisSelect(spark: SparkSession, dir: String): DataFrame = {
+    val toks = Tables
+      .documents(spark, dir)
       .select(col("doc_id"), col("source"), tokens(col("text")).as("t"))
       .cacheTracked()
     // the scored trigram frame feeds BOTH LM joins — materialize once

@@ -157,8 +157,22 @@ class JiraScanBuilder(schema: StructType, options: CaseInsensitiveStringMap)
 
 sealed trait JiraPartition extends InputPartition
 
-case class JiraInputPartition(startAt: Int, pageSize: Int)
+/** One /search page: issue indices [startAt, end), end ≤ startAt +
+  * pageSize. The reader keeps only issues below `end`, so a page that
+  * grew after the offset probe cannot deliver an issue the next batch
+  * (which starts at `end`) delivers again.
+  */
+case class JiraInputPartition(startAt: Int, pageSize: Int, end: Int)
     extends JiraPartition
+
+object JiraInputPartition {
+
+  /** The pages covering issue indices [start, end). */
+  def pages(start: Int, end: Int, pageSize: Int): Array[InputPartition] =
+    (start until end by pageSize)
+      .map(s => JiraInputPartition(s, pageSize, math.min(s + pageSize, end)))
+      .toArray
+}
 
 /** Point-lookup partition: pushed `key = X` equalities. */
 case class JiraLookupPartition(keys: Seq[String]) extends JiraPartition
@@ -183,9 +197,7 @@ class JiraScan(
     else {
       val t = JiraSourceOptions.transport(options)
       val total = JiraSourceOptions.probeTotal(t, sleepScale)
-      (0 until total by pageSize)
-        .map(JiraInputPartition(_, pageSize): InputPartition)
-        .toArray
+      JiraInputPartition.pages(0, total, pageSize)
     }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -275,9 +287,7 @@ class JiraMicroBatchStream(
   ): Array[InputPartition] = {
     val s = start.asInstanceOf[JiraOffset].issueIndex
     val e = end.asInstanceOf[JiraOffset].issueIndex
-    (s until e by pageSize)
-      .map(JiraInputPartition(_, pageSize): InputPartition)
-      .toArray
+    JiraInputPartition.pages(s, e, pageSize)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -461,7 +471,7 @@ class JiraPartitionReader(
   override protected def issueTexts: Iterator[(String, InternalRow)] =
     JiraResponse.issues(JiraRetry.withRetry(sleepScale = sleepScale)(
       transport.fetch(partition.startAt, partition.pageSize, restFields)
-    )).iterator
+    )).iterator.take(partition.end - partition.startAt)
 }
 
 /** Point-lookup reader: pushed `key` equalities become single-issue

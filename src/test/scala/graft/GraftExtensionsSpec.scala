@@ -176,7 +176,6 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkSpec {
       // folds no kernel takes: float x double and double x double
       // products, a long count
       "Similarity.scala" -> "project",
-      "ScaleBench.scala" -> "jlRow",
       "Multimodal.scala" -> "dot",
       "Dedup.scala" -> "withBits")
     val found = sources("src/main/scala").flatMap { f =>
@@ -197,6 +196,33 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkSpec {
       }
     }
     assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("every spec main cites exists, and main never names the retired scale main") {
+    // scaladocs cite the spec that checks a claim; a citation of a
+    // spec that does not exist checks nothing
+    import scala.jdk.CollectionConverters._
+    def text(f: java.nio.file.Path): String = new String(
+      java.nio.file.Files.readAllBytes(f),
+      java.nio.charset.StandardCharsets.ISO_8859_1)
+    val defined = sources("src/test/scala").flatMap { f =>
+      """\b(?:class|trait|object)\s+(\w+)""".r
+        .findAllMatchIn(text(f)).map(_.group(1))
+    }.toSet
+    val main = sources("src/main/scala")
+    val dangling = main.flatMap { f =>
+      """\b[A-Z]\w*Spec\b""".r.findAllIn(text(f))
+        .filterNot(defined).map(n => s"$f: $n")
+    }.distinct
+    assert(dangling.isEmpty, dangling.mkString("\n"))
+    val deleted = main.flatMap { f =>
+      java.nio.file.Files.readAllLines(f,
+        java.nio.charset.StandardCharsets.ISO_8859_1).asScala.zipWithIndex
+        // [B] keeps this line from matching itself
+        .collect { case (l, i) if "Scale[B]ench".r.findFirstIn(l).nonEmpty =>
+          s"$f:${i + 1}: ${l.trim}" }
+    }
+    assert(deleted.isEmpty, deleted.mkString("\n"))
   }
 
   test("SQL functions are registered only by GraftExtensions") {

@@ -16,6 +16,26 @@ class CoPurchaseGraphSpec extends AnyFunSuite with SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
+  // The hub-adversarial shapes of the graph operators' scale claims,
+  // built small: T disjoint triangles plus one hub with S spokes
+  // (un-oriented, the hub alone would emit C(S,2) wedges), and Q
+  // disjoint 4-cliques past the hub's ids.
+  private val T = 300L
+  private val S = 2000L
+  private val Q = 50L
+  private val hub = 3 * T
+
+  private def hubGraph: Seq[(Long, Long)] =
+    (0L until T).flatMap(i =>
+      Seq((3 * i, 3 * i + 1), (3 * i, 3 * i + 2), (3 * i + 1, 3 * i + 2))) ++
+      (1L to S).map(i => (hub, hub + i))
+
+  private def k4s: Seq[(Long, Long)] = {
+    val base = hub + S + 1
+    for (q <- 0L until Q; i <- 0L to 3L; j <- (i + 1) to 3L)
+      yield (base + 4 * q + i, base + 4 * q + j)
+  }
+
   private def containsEdgesSubtree(df: DataFrame): Boolean = {
     val seam = CoPurchaseGraph.edges(spark, sf).queryExecution.analyzed
     df.queryExecution.analyzed.exists(_.sameResult(seam))
@@ -45,17 +65,36 @@ class CoPurchaseGraphSpec extends AnyFunSuite with SparkSpec {
     assert(got((3L, 4L)) == 0L, "bridge")
   }
 
+  test("triangles: a 2000-spoke hub adds no wedge (q445)") {
+    import spark.implicits._
+    val edges = hubGraph.toDF("u", "v")
+    assert(CoPurchaseGraph.triangles(edges).count() == T)
+    // the work: every spoke edge points AT the hub, so the hub has
+    // out-degree 0 and the wedge join emits exactly one wedge per
+    // triangle, not C(S,2) through the hub
+    val out = CoPurchaseGraph
+      .oriented(edges, CoPurchaseGraph.degrees(edges))
+      .groupBy(col("src"))
+      .agg(count(lit(1)).as("d"))
+    assert(out.filter(col("src") === hub).isEmpty)
+    val wedges = out.agg(sum(col("d") * (col("d") - 1) / 2)).head().getDouble(0)
+    assert(wedges == T.toDouble)
+  }
+
   test("boundedTrussClasses: bridge→2, pendant tri→3, K4→4") {
     import spark.implicits._
+    def classes(edges: Seq[(Long, Long)]): Map[Long, Long] =
+      CoPurchaseGraph
+        .boundedTrussClasses(spark, edges.toDF("u", "v"), peelRounds = 4)
+        .collect()
+        .map(r => r.getLong(0) -> r.getLong(1))
+        .toMap
     val k4 = for (a <- 0L to 3L; b <- (a + 1) to 3L) yield (a, b)
     val tri = Seq((4L, 5L), (4L, 6L), (5L, 6L))
-    val edges = (k4 ++ tri :+ ((3L, 4L))).toDF("u", "v")
-    val got = CoPurchaseGraph
-      .boundedTrussClasses(spark, edges, peelRounds = 4)
-      .collect()
-      .map(r => r.getLong(0) -> r.getLong(1))
-      .toMap
-    assert(got == Map(2L -> 1L, 3L -> 3L, 4L -> 6L))
+    assert(classes(k4 ++ tri :+ ((3L, 4L))) == Map(2L -> 1L, 3L -> 3L, 4L -> 6L))
+    // hub-adversarial (q474): the spokes sit in no triangle, every
+    // triangle edge peels in round 1, the K4s are the 4-truss
+    assert(classes(hubGraph ++ k4s) == Map(2L -> S, 3L -> 3 * T, 4L -> 6 * Q))
   }
 
   test("truss peel cascades: triangle strip peels inward") {
@@ -109,6 +148,27 @@ class CoPurchaseGraphSpec extends AnyFunSuite with SparkSpec {
     assert(got == Seq(
       (0L, 26L, 30L, 1153846L, 0L),
       (1L, 6L, 10L, 1666667L, 1L)
+    ))
+    // hub-adversarial (q482): a 2000-spoke star and a planted K24.
+    // Round 0 peels every spoke in one round (deg·n ≤ 3·m), round 1
+    // holds the hub (isolated, peeled next) and the clique, the
+    // densest prefix; then the clique peels too — two rounds
+    val k24 = for (a <- 0L until 23L; b <- (a + 1) until 24L)
+      yield (10000L + a, 10000L + b)
+    val adv = CoPurchaseGraph
+      .densestSubgraphPeel(
+        spark, ((1L to 2000L).map(i => (0L, i)) ++ k24).toDF("u", "v"),
+        rounds = 6)
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4)))
+      .sortBy(_._1)
+      .toSeq
+    // n0 = 2025, m0 = 2276: half-up(2276e6/2025) = 1123951;
+    // n1 = 25, m1 = 276: 276e6/25 = 11040000
+    assert(adv == Seq(
+      (0L, 2025L, 2276L, 1123951L, 0L),
+      (1L, 25L, 276L, 11040000L, 1L)
     ))
   }
 
@@ -176,5 +236,21 @@ class CoPurchaseGraphSpec extends AnyFunSuite with SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1))
       .toMap
     assert(capped == Map(-1L -> 21L, 0L -> 1L, 1L -> 1L, 2L -> 1L, 3L -> 1L))
+    // hub + chain (q465): seed 0 — hub 1 whose 2000 spokes form ONE
+    // level — plus a 12-node chain hanging off the seed, past the
+    // 8-hop cap: one level per hop up to the cap, whatever the hub's
+    // fan-out, and the chain tail stays at -1
+    val chainBase = 5000L
+    val hubChain = (Seq((0L, 1L), (0L, chainBase)) ++
+      (2L to 2001L).map(i => (1L, i)) ++
+      (chainBase until chainBase + 11L).map(i => (i, i + 1))).toDF("u", "v")
+    val hist = CoPurchaseGraph
+      .bfsLevelHistogram(
+        spark, CoPurchaseGraph.symmetric(hubChain), seed = 0L, maxHops = 8)
+      .collect()
+      .map(r => r.getLong(0) -> r.getLong(1))
+      .toMap
+    assert(hist == Map(-1L -> 4L, 0L -> 1L, 1L -> 2L, 2L -> 2001L) ++
+      (3L to 8L).map(_ -> 1L))
   }
 }

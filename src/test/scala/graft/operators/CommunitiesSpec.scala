@@ -46,6 +46,27 @@ class CommunitiesSpec extends AnyFunSuite with SparkSpec {
     val l2 = Communities.lpLabelsFrom(sym(Seq((7L, 9L))), 3).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(l1 == l2, "LP must be run-to-run deterministic")
+    // the same oscillation on a 2000-spoke star (q475): round 1 the
+    // hub adopts the minimum spoke label (1), every spoke the hub's
+    // (0); each later round swaps them, so after the capped 3 rounds
+    // hub = 1 and spokes = 0, exactly
+    val star = Communities
+      .lpLabelsFrom(sym((1L to 2000L).map(i => (0L, i))), rounds = 3)
+      .groupBy(col("lab"))
+      .agg(count(lit(1)).as("n"))
+      .collect()
+      .map(r => r.getLong(0) -> r.getLong(1))
+      .toMap
+    assert(star == Map(0L -> 2000L, 1L -> 1L))
+  }
+
+  private def hits(edges: Seq[(Long, Long)]): Map[Long, (Long, Long)] = {
+    import spark.implicits._
+    Communities
+      .hitsFrom(edges.toDF("src", "dst"))
+      .collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
+      .toMap
   }
 
   test("integer HITS on a 2-path: exact recurrence values") {
@@ -54,35 +75,56 @@ class CommunitiesSpec extends AnyFunSuite with SparkSpec {
     // h1 = out-sums of a1: h(1)=a(2)=1, h(2)=a(3)=1, h(3)=0
     // round 2: a(2)=h(1)=1, a(3)=h(2)=1; h(1)=1, h(2)=1
     // fixpoint from round 1 — after 4 rounds same values
-    import spark.implicits._
-    // build a tiny corpus-free check by calling the recurrence the
-    // same way hitsCopyFlow does, via a local replica
-    val e = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst").localCheckpoint(true)
-    val nodes = e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id"))).distinct()
-      .localCheckpoint(true)
-    var hub = nodes.select(col("id"), lit(1L).as("s"))
-    var auth = hub
-    for (_ <- 1 to 4) {
-      auth = nodes
-        .join(
-          e.join(hub, e("src") === hub("id")).groupBy(col("dst"))
-            .agg(sum(col("s")).as("t")),
-          nodes("id") === col("dst"), "left")
-        .select(nodes("id"), coalesce(col("t"), lit(0L)).as("s"))
-        .localCheckpoint(true)
-      hub = nodes
-        .join(
-          e.join(auth, e("dst") === auth("id")).groupBy(col("src"))
-            .agg(sum(col("s")).as("t")),
-          nodes("id") === col("src"), "left")
-        .select(nodes("id"), coalesce(col("t"), lit(0L)).as("s"))
-        .localCheckpoint(true)
-    }
-    val a = auth.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val h = hub.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(a == Map(1L -> 0L, 2L -> 1L, 3L -> 1L), s"auth $a")
-    assert(h == Map(1L -> 1L, 2L -> 1L, 3L -> 0L), s"hub $h")
+    assert(hits(Seq((1L, 2L), (2L, 3L))) ==
+      Map(1L -> ((0L, 1L)), 2L -> ((1L, 1L)), 3L -> ((1L, 0L))))
+  }
+
+  test("integer HITS: a 200-spoke star sits on the degree bound, 201 spokes trip it (q477)") {
+    // after 4 un-normalized rounds auth(spoke) = 200³ and hub(hub) =
+    // 200⁴, exact BIGINTs; one more spoke and the guard refuses
+    // before any round runs
+    val at = hits((1L to 200L).map(i => (0L, i)))
+    assert(at(0L) == ((0L, 1600000000L)))
+    assert((1L to 200L).forall(i => at(i) == ((8000000L, 0L))))
+    val e = intercept[IllegalArgumentException](
+      hits((1L to 201L).map(i => (0L, i))))
+    assert(e.getMessage.contains("max degree 201"))
+  }
+
+  test("dbscanGridPoints: tight anchors cluster apart; occupancy 4096 passes, 4097 trips (q476)") {
+    // 250 anchors 0.1 apart, 8 points each within 0.0056 of their
+    // anchor (< eps = 2⁻⁶): every point is core with 7 neighbors,
+    // every anchor its own cluster, no noise
+    val spread = spark
+      .range(2000L)
+      .select(
+        col("id").as("vec_id"),
+        (floor(col("id") / 8L).cast("double") * 0.1 +
+          (col("id") % 8L).cast("double") * 0.0008).as("x"),
+        lit(0.0).as("y"))
+    val got = Communities
+      .dbscanGridPoints(spark, spread)
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(got.count(c => c._1 >= 0L && c._2 == 8L && c._3 == 0L) == 250)
+    assert(got.count(_._1 >= 0L) == 250)
+    assert(got.filter(_._1 == -1L).toSeq == Seq((-1L, 0L, 0L)))
+    // n points in ONE eps-cell: the guard counts the occupancy
+    // before any candidate pair exists
+    def oneCell(n: Long) = spark
+      .range(n)
+      .select(col("id").as("vec_id"),
+        (col("id").cast("double") / (n * 100000.0)).as("x"),
+        lit(0.001).as("y"))
+    val e = intercept[IllegalArgumentException](
+      Communities.dbscanGridPoints(spark, oneCell(4097L)))
+    assert(e.getMessage.contains("occupancy 4097"))
+    // at the bound the cell's 4096 points are mutual neighbors: one
+    // cluster of core points
+    val at = Communities.dbscanGridPoints(spark, oneCell(4096L)).collect()
+    assert(at.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet ==
+      Set((0L, 4096L, 0L), (-1L, 0L, 0L)))
+    graft.util.Caches.releaseAll()
   }
 
   test("modularity arithmetic: two clean communities score positive") {

@@ -100,6 +100,27 @@ class PageRankSpec extends AnyFunSuite with SparkSpec {
     assert(ranks.keySet == Set(0L, 1L, 2L),
       s"rank frame must stay inside the seed component: ${ranks.keySet}")
     assert(math.abs(ranks.values.sum - 1.0) < 1e-9)
+
+    // hub-adversarial (q483): a symmetric 2000-spoke star seeded at
+    // the hub, plus a disjoint triangle. The frame holds exactly the
+    // hub and its spokes, and the hub's rank follows the 2-state
+    // recurrence: spokes split the hub's mass evenly and return all
+    // of it, teleport goes to the hub alone
+    val star = (1L to 2000L).map(l => (0L, l))
+    val far = t2.map { case (a, b) => (a + 5000L, b + 5000L) }
+    val starSym = (star ++ far ++ (star ++ far).map(_.swap))
+      .toDF("src", "dst")
+    val ppr = PageRank
+      .personalized(starSym, Seq(0L).toDF("id"), iterations = 4)
+      .collect()
+      .map(r => r.getLong(0) -> r.getDouble(1))
+      .toMap
+    assert(ppr.keySet == (0L to 2000L).toSet)
+    assert(math.abs(ppr.values.sum - 1.0) < 1e-9)
+    val (hub, _) = (1 to 4).foldLeft((1.0, 0.0)) { case ((h, sp), _) =>
+      (0.15 + 0.85 * sp, 0.85 * h)
+    }
+    assert(math.abs(ppr(0L) - hub) < 1e-9, s"hub ${ppr(0L)} vs $hub")
   }
 
   test("near-dup pagerank rows cover exactly the edged docs") {

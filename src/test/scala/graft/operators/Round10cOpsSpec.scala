@@ -36,6 +36,16 @@ class Round10cOpsSpec extends AnyFunSuite with SparkSpec {
             s"($x1,$y1)->($x2,$y2)")
       case _ =>
     }
+    // at q452's order 10 the full 1024x1024 cover is a bijection onto
+    // the domain 0..4^10-1: no row lost, both endpoints hit
+    val full = Layout
+      .hilbertIndex(
+        spark.range(1L << 20).select(
+          (col("id") % 1024L).as("x"), (col("id") / 1024L).cast("long").as("y")),
+        10, "x", "y", "d")
+      .agg(count(lit(1)), countDistinct(col("d")), min(col("d")), max(col("d")))
+      .head()
+    assert(full.toSeq == Seq(1L << 20, 1L << 20, 0L, (1L << 20) - 1))
   }
 
   test("q452: hilbert never touches more square-region blocks than " +

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-12 graph additions on hand-built graphs with pencil-checked
@@ -21,6 +22,15 @@ class Round12GraphSpec extends AnyFunSuite with SparkSpec {
     val k4 = for (a <- 0L to 3L; b <- (a + 1) to 3L) yield (a, b)
     val tri = Seq((4L, 5L), (4L, 6L), (5L, 6L))
     (k4 ++ tri :+ ((3L, 4L))).toDF("u", "v")
+  }
+
+  // hub-adversarial: a 2000-spoke star on hub 0 plus a planted K24
+  // on 10000..10023 (canonical u < v)
+  private def starK24: DataFrame = {
+    import spark.implicits._
+    val k24 = for (a <- 0L until 23L; b <- (a + 1) until 24L)
+      yield (10000L + a, 10000L + b)
+    ((1L to 2000L).map(i => (0L, i)) ++ k24).toDF("u", "v")
   }
 
   test("nodeTriangleCounts: K4 corners 3, pendant corners 1") {
@@ -46,6 +56,15 @@ class Round12GraphSpec extends AnyFunSuite with SparkSpec {
     assert(got(50L) == ((1L, 3L)), "bucket 50: node 3")
     assert(got(33L) == ((1L, 1L)), "bucket 33: node 4")
     assert(got.size == 3)
+    // q487: orientation points every spoke AT the hub, so the hub
+    // closes no wedge and the spokes report 0 by contract; the 24
+    // clique nodes sit at lcc 1 with C(23,2) = 253 triangles each
+    val adv = Relational
+      .lccBuckets(starK24)
+      .collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
+      .toMap
+    assert(adv == Map(0L -> ((2001L, 0L)), 100L -> ((24L, 6072L))))
   }
 
   test("richClubFrom: star + one spoke edge, phi 1.0 then empty club") {
@@ -69,6 +88,17 @@ class Round12GraphSpec extends AnyFunSuite with SparkSpec {
     (8L to 9L).foreach { d =>
       assert(got(d) == ((2L, 1L, 0L, 0L)), s"decile $d")
     }
+    // q489: degrees {1, 23, 2000} — the spokes put every decile bound
+    // at k = 1, and the club above it is the hub + clique with only
+    // the 276 clique edges: phi = half-up(2·276·10⁶ / (25·24))
+    val adv = Relational
+      .richClubFrom(starK24)
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4)))
+      .sortBy(_._1)
+      .toSeq
+    assert(adv == (1L to 9L).map(d => (d, 1L, 25L, 276L, 920000L)))
   }
 
   test("linkPredictionFrom: C4 diagonals scored, edges anti-joined") {
@@ -108,6 +138,29 @@ class Round12GraphSpec extends AnyFunSuite with SparkSpec {
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
           r.getLong(4)))
     assert(got.toSeq == Seq((2L, 4L, 2L, 666666L, 1000000L)))
+  }
+
+  test("linkPredictionFrom: a 2000-spoke star fans out through its hub; degree 4096 passes, 4097 trips (q488)") {
+    def star(n: Long) =
+      spark.range(1L, n + 1L).select(lit(0L).as("doc_a"), col("id").as("doc_b"))
+    // C(2000,2) open wedges through the hub, each cn 1,
+    // ra = half-up(10⁶/2000) = 500, Jaccard 10⁶; the top-20 tie-break
+    // picks (1,2)..(1,21)
+    val got = Dedup
+      .linkPredictionFrom(star(2000L))
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4)))
+      .toSeq
+    assert(got == (2L to 21L).map(b => (1L, b, 1L, 500L, 1000000L)))
+    // the degree pre-flight runs when the frame is built, before any
+    // wedge: at the cap the frame builds (and is never forced here),
+    // one past it the build refuses
+    assert(Dedup.linkPredictionFrom(star(4096L)).columns.length == 5)
+    val e = intercept[IllegalArgumentException](
+      Dedup.linkPredictionFrom(star(4097L)))
+    assert(e.getMessage.contains("degree 4097"))
+    graft.util.Caches.releaseAll()
   }
 
   test("bfsLevelsFrom: chain levels, hop cap, unreachable absent") {

@@ -100,6 +100,8 @@ class Round5OpsSpec extends AnyFunSuite with SparkSpec {
       .count()
     assert(inconsistent == 0L)
     // one row per scored doc, predictions drawn from the label set
+    assert(r.count() == graft.Tables.documents(spark, dir).count(),
+      "every document is scored")
     val langs = r.select(col("lang")).distinct().collect().map(_.getString(0))
     val preds =
       r.select(col("pred_lang")).distinct().collect().map(_.getString(0))

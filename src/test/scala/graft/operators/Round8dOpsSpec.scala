@@ -46,6 +46,9 @@ class Round8dOpsSpec extends AnyFunSuite with SparkSpec {
       // an emitted column): E[df] = D·(1−e^(−cf/D)) ∈ (0, min(cf, D)]
       val expDf = nDocs * (1.0 - math.exp(-cf.toDouble / nDocs))
       assert(expDf > 0.0 && expDf <= math.min(cf, nDocs) + 1e-6)
+      // adaptation E[df]/df never exceeds burstiness cf/df, whose
+      // emitted half-up micro value is within 0.5e-6 of the ratio
+      assert(expDf / df <= r.getAs[Long]("burst_micro") / 1e6 + 1e-6)
     }
     // sanity on one term by hand
     val sample = rows.minBy(_.getAs[String]("w"))

@@ -76,4 +76,29 @@ class JiraStreamRecoverySpec extends AnyFunSuite with SparkSpec {
     // epoch 3: nothing new → empty batch
     assert(drain(stub, ckpt, out) == 8L) // unchanged
   }
+
+  test("a page that grew past the probed total delivers each issue once") {
+    val work = Files.createTempDirectory("jira_clip").toString
+    val stub = s"$work/stub"
+    val ckpt = s"$work/ckpt"
+    val out = s"$work/out"
+    Files.createDirectories(Paths.get(stub))
+    val issues = rawIssueLines
+    // epoch 1: page 0 reports total 7, but the last page already
+    // holds issues 6 AND 7 — the project grew between probe and read
+    writePage(stub, 0, 7, issues.slice(0, 3))
+    writePage(stub, 3, 7, issues.slice(3, 6))
+    writePage(stub, 6, 7, issues.slice(6, 8))
+    assert(drain(stub, ckpt, out) == 7L, "epoch 1 stops at offset 7")
+    val batch = spark.read.format("jira").option("stubDir", stub)
+      .option("pageSize", 3).option("retrySleepScale", 0.001).load()
+    assert(batch.count() == 7L, "the batch scan clips at its probed total")
+    // epoch 2: total 8; the next batch starts at offset 7
+    writePage(stub, 0, 8, issues.slice(0, 3))
+    writePage(stub, 7, 8, issues.slice(7, 8))
+    assert(drain(stub, ckpt, out) == 8L)
+    val keys = spark.read.json(out).select(col("key")).collect()
+    assert(keys.length == 8 && keys.distinct.length == 8,
+      "no issue delivered twice")
+  }
 }

@@ -3,7 +3,7 @@
 # overhead. Usage: tools/run.sh graft.Verify /root/testdata/sf0.001 /tmp/out
 # Mains: graft.Verify, graft.Bench, graft.QueryProfile (per-query layer
 # profile, e.g. tools/run.sh graft.QueryProfile q12_ <sfDir> --runs 3
-# --plan formatted --stages 10), graft.ScaleBench, graft.jira.JiraMain.
+# --plan formatted --stages 10), graft.jira.JiraMain.
 set -e
 CLASSES=/root/repo/target/scala-2.13/classes
 ADD_OPENS=""
