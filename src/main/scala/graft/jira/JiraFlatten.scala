@@ -21,10 +21,10 @@ import org.apache.spark.sql.functions._
   * codegen'd kernels instead: `CleanComments` (the whole comment step:
   * author, created, cleaned body, empty bodies dropped) and `NameList`
   * (components, versions, fixVersions). The drop filter and the
-  * projection then compile into one stage over the `jira` source; on
-  * the `readRaw` path the projection gets its own stage (its input
-  * Project evaluates `from_json`, which is `CodegenFallback`).
-  * JiraFlattenPlanSpec guards both plans and the output schema.
+  * projection then compile into one stage on both paths: over the
+  * `jira` source's scan, and over `readRaw`'s text scan and its
+  * `JiraDecode` generator, which is codegen'd too. JiraFlattenPlanSpec
+  * guards both plans and the output schema.
   *
   * Replicated reference quirks:
   *  - P5: issues whose `status`/`priority`/`issuetype`/`comment`/
@@ -35,8 +35,9 @@ import org.apache.spark.sql.functions._
   *    defaulted (`fields.get("status", {})` → `{}` → "Unknown").
   *    Spark's JSON parser maps both cases to null, so both readers
   *    ride the key sets of the issue and of its `fields` object along
-  *    the scan ([[ProbeFieldsKeys]]/[[ProbeTopKeys]], one
-  *    `JsonKeyProbe` pass per issue text): [[JiraPipeline.readRaw]]
+  *    the scan ([[ProbeFieldsKeys]]/[[ProbeTopKeys]], from the same
+  *    `JiraDecode` pass that parses the issue, so the keys and the
+  *    values come from the same `fields` member): [[JiraPipeline.readRaw]]
   *    per line, the jira source per issue of a page. One rule drops:
   *    a crash field (or `fields` itself) that is present in the JSON
   *    and null after parsing. Both readers emit one row per JSON

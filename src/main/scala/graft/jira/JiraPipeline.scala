@@ -1,6 +1,6 @@
 package graft.jira
 
-import graft.functions.JsonKeyProbe
+import graft.functions.JiraDecode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,40 +17,34 @@ object JiraPipeline {
 
   val FixtureDir = "/root/repo/src/test/resources/jira"
 
-  /** One row per raw line that is a JSON object: the `from_json`
-    * parse of the line, plus two presence probes read from the raw
-    * text ([[JiraFlatten.ProbeFieldsKeys]]/[[JiraFlatten.ProbeTopKeys]]).
+  /** One row per raw line that is a JSON object: the raw issue columns
+    * (`key`, `id`, `fields`) and two key sets
+    * ([[JiraFlatten.ProbeFieldsKeys]]/[[JiraFlatten.ProbeTopKeys]]).
     * Spark's JSON parser maps an absent key and an explicit JSON null
     * both to null, but the reference treats them oppositely (absent →
     * default, null → crash-drop; scraper.py:217,316-318), so the key
-    * sets ride along the same scan — one text read, no second pass
-    * over the file, no shuffle. Both key sets come from one
-    * [[JsonKeyProbe]] pass over the line that skips every value but
-    * the `fields` object's keys. A line the probe finds no object in
+    * sets ride along the same scan. One [[JiraDecode]] pass per line
+    * gives both: it tokenizes the line once and converts the values as
+    * `from_json` does. It is a generator (`explode` over zero or one
+    * decoded issue), so flatten's drop Filter sits above it and cannot
+    * evaluate the decode again. The generator emits the issue as one
+    * struct column, which that Filter and flatten's Project each read
+    * whole, so whole-stage codegen gives each of them its own method;
+    * `inline` emitted five columns and left all three operators in one
+    * method, which took the JIT longer to compile (PERF.md, "One decode
+    * per issue"). A line the decode finds no object in
     * (blank, malformed, a JSON scalar or array) yields no row; see
     * [[quarantined]]. The `jira` source decodes each issue of a page
-    * the same way.
+    * with the same kernel.
     */
   def readRaw(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .text(path)
-      .select(col("value"), JsonKeyProbe.keyProbe(col("value")).as("p"))
-      // one row per line the probe finds an object in, as a generator
-      // over the probe column (a Filter would be pushed below the
-      // projection and evaluate the probe a second time); only those
-      // lines are parsed
-      .select(col("value"), explode(when(
-        col("p").getField(JsonKeyProbe.TopKeys).isNotNull, array(col("p"))))
-        .as("p"))
-      .select(from_json(col("value"), JiraSchemas.rawIssueSchema).as("j"),
-        col("p"))
-      .select(col("j.*"),
-        col("p").getField(JsonKeyProbe.FieldsKeys).as(JiraFlatten.ProbeFieldsKeys),
-        col("p").getField(JsonKeyProbe.TopKeys).as(JiraFlatten.ProbeTopKeys))
+    spark.read.text(path)
+      .select(explode(JiraDecode.decode(col("value"))).as("issue"))
+      .select(col("issue.*"))
 
   /** The lines [[readRaw]] skips, verbatim in one `value` column: every
-    * non-blank line that is not a JSON object (malformed, a scalar or
-    * an array). At corpus scale a bad-records rate is an SLO, not an
+    * non-blank line the decode finds no object in (malformed, a scalar
+    * or an array). At corpus scale a bad-records rate is an SLO, not an
     * exception: these are kept for replay and debugging, never fail
     * the read. Lazy like any scan; nothing is cached.
     */
@@ -58,7 +52,7 @@ object JiraPipeline {
     spark.read
       .text(path)
       .filter(trim(col("value"), " \t") =!= "" &&
-        JsonKeyProbe.keyProbe(col("value")).getField(JsonKeyProbe.TopKeys).isNull)
+        size(JiraDecode.decode(col("value"))) === 0)
 
   /** Flattened issues for a list of (project, rawJsonPath), tagged
     * with project_rank to preserve config order.

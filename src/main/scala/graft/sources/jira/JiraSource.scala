@@ -6,9 +6,9 @@ import graft.jira.JiraSchemas
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
-import org.apache.spark.sql.graftbridge.JsonBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -29,13 +29,15 @@ import scala.collection.JavaConverters._
   *    cursor — the reference's checkpoint file (issues_processed,
   *    scraper.py:81-87) maps to Spark's offset log under
   *    checkpointLocation.
-  *  - One decode per issue, shared with the file path: each page (or
-  *    point-lookup body) is split into issue object texts with their
-  *    presence probes ([[JiraResponse]]), and each text is parsed by
-  *    `from_json` exactly as [[graft.jira.JiraPipeline.readRaw]] parses
-  *    a line. A non-object element or an issue that fails to parse
-  *    drops that issue alone, and a syntax error ends its page; none
-  *    of these fails the scan or the stream.
+  *  - One decode per issue, shared with the file path: the walk of a
+  *    page (or point-lookup body) hands each issue object to the
+  *    [[graft.functions.JiraDecode]] kernel that
+  *    [[graft.jira.JiraPipeline.readRaw]] runs on a line, which returns
+  *    the parsed issue with its presence probes ([[JiraResponse]]). A
+  *    non-object element drops that element alone, and a syntax error
+  *    ends its page; neither fails the scan or the stream. The issues
+  *    read and the issues a syntax error cut off are the scan's custom
+  *    metrics (`issuesRead`, `issuesLost`).
   *
   * Usage (stub-backed, zero-egress):
   * {{{
@@ -189,6 +191,9 @@ class JiraScan(
 
   override def readSchema(): StructType = required
 
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    Array(new JiraIssuesRead, new JiraIssuesLost)
+
   override def toBatch: Batch = this
 
   override def planInputPartitions(): Array[InputPartition] =
@@ -316,43 +321,50 @@ class JiraReaderFactory(required: StructType, options: Map[String, String])
   }
 }
 
-/** The one split of a response body into issues: a streaming Jackson
-  * pass that yields each issue object's own JSON text (its character
-  * span in the body) with its [[graft.functions.JsonKeyProbe]] row,
-  * computed by the same walk. Non-object elements are skipped. A
-  * syntax error ends the walk and keeps the objects completed before
-  * it, so a malformed body yields nothing and never fails the read.
-  * Each text then goes through the `from_json` parse that
-  * [[graft.jira.JiraPipeline.readRaw]] runs on a line, so both front
-  * ends decode an issue the same way. The page's `total` is read by
-  * the same kind of walk, so a bad issue in the probed page cannot
+/** The walk of a response body. Each issue object is decoded by
+  * [[graft.functions.JiraDecode]] while the walk is on it: one Jackson
+  * pass, no copy of its text, no second parse. Non-object elements are
+  * skipped. A syntax error ends the walk and keeps the issues decoded
+  * before it, so a malformed body yields nothing and never fails the
+  * read; the issues it cuts off are counted. The page's `total` is read
+  * by the same kind of walk, so a bad issue in the probed page cannot
   * fail planning either.
   */
 object JiraResponse {
   import com.fasterxml.jackson.core.{JsonParser, JsonProcessingException, JsonToken}
-  import graft.functions.JsonKeyProbe
+  import graft.functions.JiraDecode
   import scala.collection.mutable.ArrayBuffer
 
-  /** The object elements of a /search body's `issues` array, in order. */
-  def issues(body: String): Seq[(String, InternalRow)] = {
-    val out = ArrayBuffer.empty[(String, InternalRow)]
-    topLevel(body) { (p, name, t) =>
+  /** The decoded object elements among the first `limit` elements of a
+    * /search body's `issues` array, in order, and the issues lost: when
+    * a syntax error ends the walk, `limit` minus the elements walked
+    * before it, else 0.
+    */
+  def issues(body: String, limit: Int, decoder: JiraDecode.Decoder)
+      : (Seq[InternalRow], Int) = {
+    val out = ArrayBuffer.empty[InternalRow]
+    var walked = 0
+    val complete = topLevel(body) { (p, name, t) =>
       if (name != "issues" || t != JsonToken.START_ARRAY) false
       else {
-        while (p.nextToken() != JsonToken.END_ARRAY)
-          if (p.currentToken == JsonToken.START_OBJECT) out += objectText(p, body)
+        while (walked < limit && p.nextToken() != JsonToken.END_ARRAY) {
+          if (p.currentToken == JsonToken.START_OBJECT) out += decoder.issue(p)
           else p.skipChildren()
+          walked += 1
+        }
         true
       }
     }
-    out.toSeq
+    (out.toSeq, if (complete) 0 else limit - walked)
   }
 
-  /** A GET /issue/{key} body, when it is an object. */
-  def issue(body: String): Option[(String, InternalRow)] =
+  /** A GET /issue/{key} body, decoded when it is an object, and 1 lost
+    * issue when it is malformed.
+    */
+  def issue(body: String, decoder: JiraDecode.Decoder): (Seq[InternalRow], Int) =
     guarded(body) { p =>
-      if (p.nextToken() == JsonToken.START_OBJECT) Some(objectText(p, body)) else None
-    }.flatten
+      if (p.nextToken() == JsonToken.START_OBJECT) Seq(decoder.issue(p)) else Nil
+    }.fold((Seq.empty[InternalRow], 1))((_, 0))
 
   /** The integer `total` of a /search body. */
   def total(body: String): Option[Int] = {
@@ -366,7 +378,7 @@ object JiraResponse {
 
   /** Runs `f` over a parser on `body`; malformed input ends it early. */
   private def guarded[T](body: String)(f: JsonParser => T): Option[T] = {
-    val p = JsonKeyProbe.parser(body)
+    val p = JiraDecode.factory.createParser(body)
     try Some(f(p))
     catch { case _: JsonProcessingException | _: java.io.IOException => None }
     finally p.close()
@@ -374,10 +386,11 @@ object JiraResponse {
 
   /** Offers each top-level member (name, first value token) of an
     * object body to `member` until it returns true (consumed, done);
-    * a member it declines is skipped.
+    * a member it declines is skipped. False when a syntax error ended
+    * the walk.
     */
   private def topLevel(body: String)(
-      member: (JsonParser, String, JsonToken) => Boolean): Unit =
+      member: (JsonParser, String, JsonToken) => Boolean): Boolean =
     guarded(body) { p =>
       var done = p.nextToken() != JsonToken.START_OBJECT
       while (!done && p.nextToken() == JsonToken.FIELD_NAME) {
@@ -385,79 +398,72 @@ object JiraResponse {
         done = member(p, name, p.nextToken())
         if (!done) p.skipChildren()
       }
-    }
-
-  private def objectText(p: JsonParser, body: String): (String, InternalRow) = {
-    val start = p.currentTokenLocation().getCharOffset.toInt
-    val probe = JsonKeyProbe.probe(p)
-    (body.substring(start, p.currentTokenLocation().getCharOffset.toInt + 1), probe)
-  }
+    }.isDefined
 }
 
-/** Reader plumbing shared by the page and point-lookup readers: splits
-  * the pruned schema into parsed columns and probe columns, decodes
-  * each issue text with one `from_json` parser built per partition,
-  * and assembles rows in the pruned order.
+/** Reader plumbing shared by the page and point-lookup readers: one
+  * [[graft.functions.JiraDecode.Decoder]] per partition decodes each
+  * issue into the pruned schema, probe columns included, and the
+  * reader reports the issues it read and the issues a syntax error cut
+  * off as the scan's custom metrics.
   */
 abstract class JiraIssueReader(required: StructType)
     extends PartitionReader[InternalRow] {
-  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-  import org.apache.spark.unsafe.types.UTF8String
 
-  /** (object text, probe row) of each issue this partition reads. */
-  protected def issueTexts: Iterator[(String, InternalRow)]
-
-  private val probeNames =
-    Set(graft.jira.JiraFlatten.ProbeFieldsKeys,
-      graft.jira.JiraFlatten.ProbeTopKeys)
-
-  /** Columns the JSON row parser materializes (probes excluded). */
-  private val parseSchema: StructType =
-    StructType(required.fields.filterNot(f => probeNames(f.name)))
+  protected final val decoder = new graft.functions.JiraDecode.Decoder(required)
 
   /** The server-side projection: pruned fields.* subfield names — the
     * REST `fields=` param (pushdown of column pruning to the source).
     */
-  protected final val restFields: Seq[String] =
-    parseSchema.fields
-      .find(_.name == "fields")
-      .map(_.dataType.asInstanceOf[StructType].fieldNames.toSeq)
-      .getOrElse(Nil)
+  protected final def restFields: Seq[String] = decoder.restFields
 
-  private lazy val decode = JsonBridge.fromJson(parseSchema)
+  /** Each response's decoded issues and the issues it lost. */
+  protected def responses: Iterator[(Seq[InternalRow], Int)]
 
-  private def assemble(text: String, probe: InternalRow): InternalRow = {
-    val row = decode(UTF8String.fromString(text))
-    var pi = 0
-    val vals = new Array[Any](required.length)
-    var i = 0
-    while (i < required.length) {
-      val f = required.fields(i)
-      vals(i) =
-        if (f.name == graft.jira.JiraFlatten.ProbeFieldsKeys) probe.getArray(0)
-        else if (f.name == graft.jira.JiraFlatten.ProbeTopKeys) probe.getArray(1)
-        else {
-          val v = row.get(pi, parseSchema.fields(pi).dataType)
-          pi += 1
-          v
-        }
-      i += 1
-    }
-    new GenericInternalRow(vals)
-  }
+  private var read, lost = 0L
 
   private lazy val rows: Iterator[InternalRow] =
-    issueTexts.map { case (text, probe) => assemble(text, probe) }
+    responses.flatMap { case (issues, n) => lost += n; issues }
 
   private var current: InternalRow = _
 
   override def next(): Boolean =
-    if (rows.hasNext) { current = rows.next(); true }
+    if (rows.hasNext) { current = rows.next(); read += 1; true }
     else false
 
   override def get(): InternalRow = current
 
+  override def currentMetricsValues(): Array[CustomTaskMetric] =
+    Array(JiraScanMetrics.task(JiraScanMetrics.IssuesRead, read),
+      JiraScanMetrics.task(JiraScanMetrics.IssuesLost, lost))
+
   override def close(): Unit = ()
+}
+
+/** The jira scan's custom metrics, summed over its partitions. */
+object JiraScanMetrics {
+
+  val IssuesRead = "issuesRead"
+  val IssuesLost = "issuesLost"
+
+  def task(metric: String, n: Long): CustomTaskMetric = new CustomTaskMetric {
+    override def name(): String = metric
+    override def value(): Long = n
+  }
+}
+
+/** Issues the scan decoded into rows. */
+class JiraIssuesRead extends CustomSumMetric {
+  override def name(): String = JiraScanMetrics.IssuesRead
+  override def description(): String = "issues read"
+}
+
+/** Issues a syntax error cut off: the rest of a /search page after the
+  * error, or a malformed point-lookup body.
+  */
+class JiraIssuesLost extends CustomSumMetric {
+  override def name(): String = JiraScanMetrics.IssuesLost
+  override def description(): String = "issues lost to a syntax error"
 }
 
 /** Page reader: one /search request per partition. */
@@ -468,10 +474,10 @@ class JiraPartitionReader(
     sleepScale: Double
 ) extends JiraIssueReader(required) {
 
-  override protected def issueTexts: Iterator[(String, InternalRow)] =
-    JiraResponse.issues(JiraRetry.withRetry(sleepScale = sleepScale)(
+  override protected def responses: Iterator[(Seq[InternalRow], Int)] =
+    Iterator(JiraResponse.issues(JiraRetry.withRetry(sleepScale = sleepScale)(
       transport.fetch(partition.startAt, partition.pageSize, restFields)
-    )).iterator.take(partition.end - partition.startAt)
+    ), partition.end - partition.startAt, decoder))
 }
 
 /** Point-lookup reader: pushed `key` equalities become single-issue
@@ -485,13 +491,12 @@ class JiraLookupReader(
     sleepScale: Double
 ) extends JiraIssueReader(required) {
 
-  override protected def issueTexts: Iterator[(String, InternalRow)] =
+  override protected def responses: Iterator[(Seq[InternalRow], Int)] =
     partition.keys.iterator.flatMap { key =>
       JiraRetry
         .withRetry(sleepScale = sleepScale)(
           transport.fetchIssue(key, restFields)
         )
-        .iterator
-        .flatMap(JiraResponse.issue)
+        .map(JiraResponse.issue(_, decoder))
     }
 }

@@ -1,32 +1,35 @@
 package org.apache.spark.sql.graftbridge
 
+import com.fasterxml.jackson.databind.util.TokenBuffer
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JsonToStructs}
+import org.apache.spark.sql.catalyst.json.{JacksonParser, JSONOptions}
+import org.apache.spark.sql.catalyst.util.{FailureSafeParser, PermissiveMode}
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{StringType, StructType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.StructType
 
-/** Bridge to the expression behind `from_json`, so the Jira DSv2
-  * source decodes an issue's JSON text with the very parse
-  * [[graft.jira.JiraPipeline.readRaw]] runs on a JSONL line. Lives
-  * under org.apache.spark.sql.* for package-private access.
+/** Bridge to Spark's JSON value conversion, so [[graft.functions.JiraDecode]]
+  * converts an issue exactly as `from_json` does without a second
+  * tokenization. Lives under org.apache.spark.sql.* beside the other
+  * bridges to Spark internals.
   */
 object JsonBridge {
 
-  /** `from_json(text, schema)` as a function, built once per
-    * partition reader: PERMISSIVE (malformed input gives a row of
-    * nulls, never an exception), with the session time zone the
-    * analyzer gives `from_json`. Call it where the task's SQL conf is
+  /** The conversion `from_json` applies to a JSON text, applied to the
+    * tokens of one JSON object already copied into a `TokenBuffer`: Spark's
+    * `JacksonParser` under a PERMISSIVE `FailureSafeParser` (a value of
+    * the wrong type gives null or a partial row, never an exception),
+    * with the options and session time zone the analyzer gives
+    * `from_json`. Build it once per task, where the task's SQL conf is
     * set.
     */
-  def fromJson(schema: StructType): UTF8String => InternalRow = {
-    val expr = JsonToStructs(schema, Map.empty[String, String],
-      BoundReference(0, StringType, nullable = true),
-      Some(SQLConf.get.sessionLocalTimeZone))
-    val input = new GenericInternalRow(1)
-    json => {
-      input.update(0, json)
-      expr.eval(input).asInstanceOf[InternalRow]
-    }
+  def tokenParser(schema: StructType): TokenBuffer => InternalRow = {
+    val conf = SQLConf.get
+    val options = new JSONOptions(Map.empty[String, String],
+      conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
+    val raw = new JacksonParser(schema, options, allowArrayAsStructs = false)
+    val safe = new FailureSafeParser[TokenBuffer](
+      buf => raw.parse[TokenBuffer](buf, (_, b) => b.asParser(), _ => null),
+      PermissiveMode, schema, options.columnNameOfCorruptRecord)
+    buf => safe.parse(buf).next()
   }
 }

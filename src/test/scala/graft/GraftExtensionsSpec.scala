@@ -198,6 +198,16 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkSpec {
     assert(found.isEmpty, found.mkString("\n"))
   }
 
+  test("the JIRA read paths never parse an issue with from_json") {
+    // both readers decode an issue in one JiraDecode pass; a from_json
+    // would tokenize it a second time
+    val files = Seq("src/main/scala/graft/jira", "src/main/scala/graft/sources",
+      "src/main/scala/org/apache/spark/sql/graftbridge").flatMap(sources)
+    assert(files.exists(_.getFileName.toString == "JiraSource.scala"))
+    val calls = hits(files, """\bfrom_json\s*\(|\bJsonToStructs\b|\bfromJson\s*\(""")
+    assert(calls.isEmpty, calls.mkString("\n"))
+  }
+
   test("every spec main cites exists, and main never names the retired scale main") {
     // scaladocs cite the spec that checks a claim; a citation of a
     // spec that does not exist checks nothing

@@ -14,26 +14,27 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StringType, StructField,
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Key sets of a JSON object line and of its `fields` member, from one
-  * streaming Jackson pass that skips every value it does not need.
+  * streaming Jackson pass that skips every value it does not need: the
+  * probe half of the composed form `JiraPipeline.readRaw` ran before
+  * [[JiraDecode]]. JiraDecodeSpec keeps `from_json` plus this probe as
+  * the kernel's reference.
   *
   * Returns `struct<fields_keys: array<string>, top_keys: array<string>>`
   * equal to the composed pair
   * `json_object_keys(get_json_object(v, "$.fields"))` /
-  * `json_object_keys(v)`, which walked the line three times and
-  * re-serialised the whole `fields` object in between. Their quirks
-  * carry over (JsonKeyProbeSpec pins them):
+  * `json_object_keys(v)`. Their quirks carry over (JsonKeyProbeSpec
+  * pins them):
   *  - both are null for null, empty, malformed or non-object input —
   *    malformed anywhere inside the top-level object; text after it
   *    is never read;
   *  - `fields_keys` comes from the first `fields` member whose value
   *    is not JSON null; it is null for a scalar or array, and for a
-  *    string it is the key set of the JSON text the string holds;
+  *    string it is the key set of the JSON text the string holds
+  *    (`JiraDecode` reads the member `from_json` keeps instead);
   *  - keys keep document order and duplicates.
   *
   * The parser factory has the features of Spark's JSON expressions
-  * (unescaped control characters, single quotes). [[JsonKeyProbe.probe]]
-  * is the walk itself; the `jira` source runs it on each issue object
-  * of a response while splitting the response into issue texts.
+  * (unescaped control characters, single quotes).
   */
 case class JsonKeyProbe(child: Expression) extends UnaryExpression {
 
@@ -127,16 +128,11 @@ object JsonKeyProbe {
     } finally p.close()
   }
 
-  /** A parser over a Java string with this probe's features; its
-    * token locations are character offsets into `json`.
-    */
-  def parser(json: String): JsonParser = factory.createParser(json)
-
   /** The probe row of the object the parser's current START_OBJECT
     * opens; leaves the parser on its END_OBJECT. Throws what the
     * parser throws on malformed input.
     */
-  def probe(p: JsonParser): InternalRow = {
+  private def probe(p: JsonParser): InternalRow = {
     val top = new java.util.ArrayList[AnyRef]()
     var fieldsKeys: GenericArrayData = null
     var matched = false

@@ -7,12 +7,10 @@ import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import org.scalacheck.Gen
-import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The one-pass [[JsonKeyProbe]] must equal the composed builtins
-  * `readRaw` probed with before (kept below as the reference):
+/** The one-pass [[JsonKeyProbe]] must equal the composed builtins it
+  * replaced (kept below as the reference):
   * `json_object_keys(get_json_object(v, "$.fields"))` and
   * `json_object_keys(v)` — including every quirk of that pair on
   * absent, null, non-object, duplicated and malformed input. Both the
@@ -61,63 +59,15 @@ class JsonKeyProbeSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("absent, null, scalar, array and string-held fields") {
-    diff(Seq(
-      null,
-      """{"key":"A-1","id":"1"}""",
-      """{"key":"A-1","fields":null}""",
-      """{"fields":{}}""",
-      """{"fields":1}""",
-      """{"fields":true}""",
-      """{"fields":"plain text"}""",
-      """{"fields":""}""",
-      """{"fields":[{"status":null}]}""",
-      """{"fields":"{\"status\":null,\"b\":[1,{\"c\":2}]}"}""",
-      """{"fields":"[1,2]"}""",
-      """{"fields":"{\"a\":1"}""",
-      """{"x":{"fields":{"q":1}},"fields":{"r":{"fields":2}}}""",
-      """{"key":"A-2","fields":{"status":null,"priority":{"name":"P"},"comment":{"comments":[]}}}"""
-    ))
+    diff(JsonKeyProbeSpec.FieldsShapes)
   }
 
   test("duplicate keys at both levels, escaped and quoted key names") {
-    diff(Seq(
-      """{"a":1,"a":2,"fields":{"x":1,"x":{"y":2}}}""",
-      """{"fields":null,"fields":{"s":1}}""",
-      """{"fields":{"a":1},"fields":{"b":2}}""",
-      """{"fields":{"a":1},"fields":null}""",
-      """{"fields":3,"fields":{"b":2}}""",
-      """{"fields":{"st\"atus":1,"é":2,"t\\ab":3}}""",
-      """{'fields':{'a':1,"b":'x'},'k':'v'}""",
-      "{\"fields\":{\"a\":\"line\nbreak\"},\"t\":\"\ttab\"}",
-      """{"fields":{"é":1},"ü":"ß","中":{"文":[1]}}"""
-    ))
+    diff(JsonKeyProbeSpec.Duplicates)
   }
 
   test("malformed objects, trailing garbage and non-object lines") {
-    diff(Seq(
-      """{"fields":{"a":1,}}""",
-      """{"fields":{"a":1},"b":}""",
-      """{"fields":{"a" 1}}""",
-      """{"fields":{"a":1}""",
-      """{"fields":{"a":1},"b":[1,2}""",
-      """{"b":tru,"fields":{"a":1}}""",
-      """{"fields":{"a":1}} trailing""",
-      """{"a":1}}}""",
-      """{"a":1} {"b":2}""",
-      """{"fields":{"a":1}},""",
-      """[1,2]""",
-      """[{"fields":{"a":1}}]""",
-      """"str"""",
-      "42",
-      "null",
-      "",
-      "   ",
-      "{",
-      "}",
-      "\u0000{\"a\":1}",
-      "{\"a\":\"x\u0000y\",\"fields\":{\"b\":1}}",
-      "{\"a\":\"ÿ\"}"
-    ))
+    diff(JsonKeyProbeSpec.Malformed)
   }
 
   test("the JIRA fixture lines") {
@@ -128,14 +78,74 @@ class JsonKeyProbeSpec extends AnyFunSuite with SparkSpec {
     diff(lines)
   }
 
-  test("readRaw evaluates the probe once per line") {
-    val (_, path) = JiraPipeline.fixtureProjects.head
-    val plan = JiraPipeline.readRaw(spark, path)
-      .queryExecution.executedPlan.toString
-    assert("json_key_probe\\(".r.findAllMatchIn(plan).size == 1, plan)
-  }
-
   test("property: probe == composed pair on random, mutated JSON") {
+    diff(JsonKeyProbeSpec.Mutated)
+  }
+}
+
+/** The key-probe cases, shared with JiraDecodeSpec, which checks the
+  * one-pass decode against `from_json` plus this probe on them.
+  */
+object JsonKeyProbeSpec {
+  import org.scalacheck.Gen
+  import org.scalacheck.rng.Seed
+
+  val FieldsShapes: Seq[String] = Seq(
+    null,
+    """{"key":"A-1","id":"1"}""",
+    """{"key":"A-1","fields":null}""",
+    """{"fields":{}}""",
+    """{"fields":1}""",
+    """{"fields":true}""",
+    """{"fields":"plain text"}""",
+    """{"fields":""}""",
+    """{"fields":[{"status":null}]}""",
+    """{"fields":"{\"status\":null,\"b\":[1,{\"c\":2}]}"}""",
+    """{"fields":"[1,2]"}""",
+    """{"fields":"{\"a\":1"}""",
+    """{"x":{"fields":{"q":1}},"fields":{"r":{"fields":2}}}""",
+    """{"key":"A-2","fields":{"status":null,"priority":{"name":"P"},"comment":{"comments":[]}}}"""
+  )
+
+  val Duplicates: Seq[String] = Seq(
+    """{"a":1,"a":2,"fields":{"x":1,"x":{"y":2}}}""",
+    """{"fields":null,"fields":{"s":1}}""",
+    """{"fields":{"a":1},"fields":{"b":2}}""",
+    """{"fields":{"a":1},"fields":null}""",
+    """{"fields":3,"fields":{"b":2}}""",
+    """{"fields":{"st\"atus":1,"é":2,"t\\ab":3}}""",
+    """{'fields':{'a':1,"b":'x'},'k':'v'}""",
+    "{\"fields\":{\"a\":\"line\nbreak\"},\"t\":\"\ttab\"}",
+    """{"fields":{"é":1},"ü":"ß","中":{"文":[1]}}"""
+  )
+
+  val Malformed: Seq[String] = Seq(
+    """{"fields":{"a":1,}}""",
+    """{"fields":{"a":1},"b":}""",
+    """{"fields":{"a" 1}}""",
+    """{"fields":{"a":1}""",
+    """{"fields":{"a":1},"b":[1,2}""",
+    """{"b":tru,"fields":{"a":1}}""",
+    """{"fields":{"a":1}} trailing""",
+    """{"a":1}}}""",
+    """{"a":1} {"b":2}""",
+    """{"fields":{"a":1}},""",
+    """[1,2]""",
+    """[{"fields":{"a":1}}]""",
+    """"str"""",
+    "42",
+    "null",
+    "",
+    "   ",
+    "{",
+    "}",
+    "\u0000{\"a\":1}",
+    "{\"a\":\"x\u0000y\",\"fields\":{\"b\":1}}",
+    "{\"a\":\"ÿ\"}"
+  )
+
+  /** 600 random objects (distinct), some cut, spliced or padded. */
+  lazy val Mutated: Seq[String] = {
     val keyNames = Gen.oneOf("fields", "fields", "key", "a", "status",
       "x\\\"y", "\\u00e9", "", "comment")
     val scalar = Gen.oneOf("1", "-2.5e3", "true", "false", "null",
@@ -164,6 +174,6 @@ class JsonKeyProbeSpec extends AnyFunSuite with SparkSpec {
     }
     val samples = Gen.listOfN(600, mutated)
       .apply(Gen.Parameters.default.withSize(12), Seed(20261017L)).get
-    diff(samples.distinct)
+    samples.distinct
   }
 }

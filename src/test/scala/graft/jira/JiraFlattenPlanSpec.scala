@@ -3,7 +3,7 @@ package graft.jira
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, HigherOrderFunction}
-import org.apache.spark.sql.execution.{FilterExec, InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.{FilterExec, GenerateExec, InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -87,14 +87,26 @@ class JiraFlattenPlanSpec extends AnyFunSuite with SparkSpec {
   test("readRaw: flatten's Project compiles into its own stage") {
     for (proj <- Seq("TEST", "TEST2")) {
       val plan = executed(viaReadRaw(proj))
-      // the root is flatten's projection; the drop filter and
-      // readRaw's from_json projection sit below it
+      // the root is flatten's projection; the drop filter and the
+      // decode's Generate sit below it
       val root = plan match {
         case w: WholeStageCodegenExec => w.child
         case p => p
       }
       assert(root.isInstanceOf[ProjectExec], plan)
       assertCompiled(plan, Seq(root))
+    }
+  }
+
+  test("readRaw: the decode's Generate and flatten's Filter and Project compile into one stage") {
+    for (proj <- Seq("TEST", "TEST2")) {
+      val plan = executed(viaReadRaw(proj))
+      val ops = plan.collect {
+        case p @ (_: GenerateExec | _: FilterExec | _: ProjectExec) => p
+      }
+      assert(ops.length == 3, plan)
+      assertCompiled(plan, ops)
+      assert(plan.collect { case w: WholeStageCodegenExec => w }.length == 1, plan)
     }
   }
 

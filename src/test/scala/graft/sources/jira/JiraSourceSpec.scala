@@ -26,21 +26,28 @@ class JiraSourceSpec extends AnyFunSuite with SparkSpec {
       .option("retrySleepScale", 0.001)
 
   test("probe pass degrades gracefully and keys by issues[] index") {
-    // malformed body: the shared split yields no issues, never throws
-    assert(JiraResponse.issues("{not json").isEmpty)
-    assert(JiraResponse.issue("{not json").isEmpty)
-    // one probe per object element, in issues[] order; a non-object
-    // element is skipped, and each text is the element verbatim
+    val decoder = new graft.functions.JiraDecode.Decoder()
+    // malformed body: the walk yields no issues, never throws, and
+    // counts every issue it was asked for as lost
+    assert(JiraResponse.issues("{not json", 3, decoder) == ((Nil, 3)))
+    assert(JiraResponse.issue("{not json", decoder) == ((Nil, 1)))
+    // one decoded issue per object element, in issues[] order, with its
+    // key sets; a non-object element is skipped but holds its index
     val a = """{"key":"A","fields":{"summary":"x"}}"""
     val b = """{"key":"B","fields":{"status":{"name":"Open"}}}"""
-    val p = JiraResponse.issues(s"""{"issues":[$a,42,
-         $b]}""")
-    assert(p.map(_._1) == Seq(a, b))
+    val body = s"""{"issues":[$a,42,
+         $b]}"""
+    val (p, lost) = JiraResponse.issues(body, 3, decoder)
+    assert(lost == 0)
     def keys(r: InternalRow, i: Int) =
       r.getArray(i).toSeq[AnyRef](StringType).map(_.toString)
-    assert(keys(p(0)._2, 0) == Seq("summary") &&
-      keys(p(0)._2, 1) == Seq("key", "fields"))
-    assert(keys(p(1)._2, 0) == Seq("status"))
+    assert(p.map(_.getUTF8String(0).toString) == Seq("A", "B"))
+    assert(keys(p(0), 3) == Seq("summary") &&
+      keys(p(0), 4) == Seq("key", "fields"))
+    assert(keys(p(1), 3) == Seq("status"))
+    // the clip counts elements: B is the third
+    assert(JiraResponse.issues(body, 2, decoder)._1.map(_.getUTF8String(0).toString) ==
+      Seq("A"))
   }
 
   test("batch read returns all issues across page partitions") {
